@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -68,16 +69,18 @@ class Catalog:
         self._datasets: dict[str, Dataset] = {}
         self._store_dir = store_dir
         self._requests: RequestManager | None = None
+        self._requests_lock = threading.Lock()
         self._meta_cache: dict[tuple, dict] = {}
 
     @property
     def requests(self) -> RequestManager:
-        if self._requests is None:
-            if self._store_dir is None:
-                raise ValueError("async requests need a store_dir "
-                                 "(Catalog(spark, store_dir=...))")
-            self._requests = RequestManager(self.spark, self._store_dir)
-        return self._requests
+        with self._requests_lock:
+            if self._requests is None:
+                if self._store_dir is None:
+                    raise ValueError("async requests need a store_dir "
+                                     "(Catalog(spark, store_dir=...))")
+                self._requests = RequestManager(self.spark, self._store_dir)
+            return self._requests
 
     # -- file-driven catalog (reference catalog/catalog.yaml tree) ------------
 

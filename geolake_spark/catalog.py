@@ -13,11 +13,15 @@ emulated with the same contract Iceberg gives a job:
       data/
         <partition_path>/part-*.parquet
 
-Commit protocol (atomic via rename, single-writer):
+Commit protocol (one routine, ``IcebergishTable.commit``):
   1. write data files under data/<partition>/ (task output)
-  2. write manifest JSONs for the new partitions
-  3. write snap-N.json listing ALL live manifests (previous + new)
+  2. write manifest JSONs for the added partitions
+  3. create snap-N.json EXCLUSIVELY, listing every live manifest minus the
+     replaced and removed partitions plus the added ones — so adds and
+     removes land in ONE snapshot, and a writer that loses the race for N
+     gets CommitConflictError instead of overwriting the winner
   4. atomically rename a temp version-hint over version-hint.txt
+  5. delete the data directories of removed partitions
 
 Resume = anti-join of planned partition values against partitions already in
 the current snapshot (SURVEY.md §2.3 J6; BASELINE.json "resumable from
@@ -31,12 +35,22 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+class CommitConflictError(RuntimeError):
+    """Another writer committed the snapshot id this commit was building."""
+
+
+def _key(partition: dict) -> str:
+    return json.dumps(partition, sort_keys=True)
 
 
 class IcebergishTable:
@@ -67,15 +81,18 @@ class IcebergishTable:
         with open(self._snap_path(sid)) as f:
             return json.load(f)
 
-    def manifests(self, snap_id: int | None = None) -> list[dict]:
-        snap = self.snapshot(snap_id)
-        if snap is None:
-            return []
-        out = []
-        for mpath in snap["manifest_list"]:
-            with open(os.path.join(self.meta_dir, mpath)) as f:
-                out.append(json.load(f))
+    def _live(self, snap: dict | None) -> dict[str, tuple[str, dict]]:
+        """``snap``'s live manifests keyed by partition, in manifest-list
+        order: partition key -> (manifest file name, manifest)."""
+        out = {}
+        for name in (snap["manifest_list"] if snap else []):
+            with open(os.path.join(self.meta_dir, name)) as f:
+                man = json.load(f)
+            out[_key(man["partition"])] = (name, man)
         return out
+
+    def manifests(self, snap_id: int | None = None) -> list[dict]:
+        return [m for _, m in self._live(self.snapshot(snap_id)).values()]
 
     def committed_partitions(self, snap_id: int | None = None) -> list[dict]:
         """Partition-value dicts present in the current snapshot."""
@@ -108,7 +125,6 @@ class IcebergishTable:
         unchanged: the rewrite is verified by count BEFORE the
         destructive swap, and the manifest keeps its lineage metrics
         (row_count, cell_histogram) with only byte_size refreshed."""
-        import shutil
         path = self.partition_path(partition)
         before = [m for m in self.manifests() if m["partition"] == partition]
         if not before:
@@ -160,45 +176,6 @@ class IcebergishTable:
                 "removed_manifests": removed_manifests,
                 "retained": keep}
 
-    def drop_partitions(self, partitions: list[dict]) -> int:
-        """Commit a new snapshot whose manifest list excludes
-        ``partitions``, and remove their data directories (the
-        copy-on-write DELETE of a whole partition — merge_snapshot uses
-        this when an upsert's deletes empty a partition out).  Returns
-        the new snapshot id (no-op current id if nothing matched)."""
-        import shutil
-        prev = self.snapshot()
-        if prev is None:
-            return 0
-        victims = {json.dumps(p, sort_keys=True) for p in partitions}
-        keep, dropped = [], []
-        for mp in prev["manifest_list"]:
-            with open(os.path.join(self.meta_dir, mp)) as f:
-                part = json.load(f)["partition"]
-            if json.dumps(part, sort_keys=True) in victims:
-                dropped.append(part)
-            else:
-                keep.append(mp)
-        if not dropped:
-            return prev["snapshot_id"]
-        snap_id = prev["snapshot_id"] + 1
-        snap = {
-            "snapshot_id": snap_id,
-            "parent_id": prev["snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "manifest_list": keep,
-            "summary": {"dropped_partitions": len(dropped)},
-        }
-        with open(self._snap_path(snap_id), "w") as f:
-            json.dump(snap, f, indent=1)
-        tmp = self._hint_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(str(snap_id))
-        os.replace(tmp, self._hint_path())
-        for p in dropped:
-            shutil.rmtree(self.partition_path(p), ignore_errors=True)
-        return snap_id
-
     def diff(self, from_snap: int | None,
              to_snap: int | None = None) -> dict:
         """Partition-level diff between two snapshots — METADATA ONLY
@@ -212,22 +189,9 @@ class IcebergishTable:
         retain lineage/metrics but not readable old data — diff and
         history are the supported archaeology, read-at-snapshot is
         deliberately not offered."""
-
-        def by_part(sid):
-            snap = self.snapshot(sid) if sid is not None else None
-            if snap is None:
-                return {}
-            out = {}
-            for name in snap["manifest_list"]:
-                with open(os.path.join(self.meta_dir, name)) as f:
-                    man = json.load(f)
-                out[json.dumps(man["partition"], sort_keys=True)] = \
-                    (name, man)
-            return out
-
-        a = by_part(from_snap)
-        b = by_part(to_snap if to_snap is not None
-                    else self.current_snapshot_id())
+        a = self._live(self.snapshot(from_snap)
+                       if from_snap is not None else None)
+        b = self._live(self.snapshot(to_snap))
         added = sorted(k for k in b if k not in a)
         removed = sorted(k for k in a if k not in b)
         rewritten = sorted(k for k in a if k in b and a[k][0] != b[k][0])
@@ -259,38 +223,52 @@ class IcebergishTable:
         parts = [f"{k}={v}" for k, v in partition.items()]
         return os.path.join(self.data_dir, *parts)
 
-    def commit(self, new_manifests: list[dict]) -> int:
-        """Append new partition manifests as a new snapshot (atomic)."""
+    def commit(self, add: list[dict], remove: Sequence[dict] = ()) -> int:
+        """The one snapshot writer: a new snapshot whose manifest list is
+        the current one with ``add``'s partitions replaced or appended and
+        ``remove``'s partitions dropped, then the hint swap, then removal
+        of the dropped partitions' data directories.  Raises
+        CommitConflictError, leaving the winner untouched, when another
+        writer has already committed the same snapshot id."""
         prev = self.snapshot()
-        prev_list = list(prev["manifest_list"]) if prev else []
         snap_id = (prev["snapshot_id"] + 1) if prev else 1
-        mpaths = []
-        for m in new_manifests:
+        live = self._live(prev)
+        added = {_key(m["partition"]) for m in add}
+        dropped = [live[k][1]["partition"] for k in map(_key, remove)
+                   if k in live and k not in added]
+        gone = added | {_key(p) for p in dropped}
+        names = []
+        for m in add:
             name = f"manifest-{snap_id}-{uuid.uuid4().hex[:8]}.json"
             with open(os.path.join(self.meta_dir, name), "w") as f:
                 json.dump(m, f)
-            mpaths.append(name)
-        # replace manifests for partitions being overwritten
-        new_parts = {json.dumps(m["partition"], sort_keys=True) for m in new_manifests}
-        keep = []
-        for mp in prev_list:
-            with open(os.path.join(self.meta_dir, mp)) as f:
-                part = json.dumps(json.load(f)["partition"], sort_keys=True)
-            if part not in new_parts:
-                keep.append(mp)
+            names.append(name)
+        summary = {"added_partitions": len(add)}
+        if dropped:
+            summary["dropped_partitions"] = len(dropped)
         snap = {
             "snapshot_id": snap_id,
             "parent_id": prev["snapshot_id"] if prev else None,
             "timestamp_ms": int(time.time() * 1000),
-            "manifest_list": keep + mpaths,
-            "summary": {"added_partitions": len(new_manifests)},
+            "manifest_list": [name for k, (name, _) in live.items()
+                              if k not in gone] + names,
+            "summary": summary,
         }
-        with open(self._snap_path(snap_id), "w") as f:
-            json.dump(snap, f, indent=1)
+        try:
+            with open(self._snap_path(snap_id), "x") as f:
+                json.dump(snap, f, indent=1)
+        except FileExistsError:
+            for name in names:
+                os.remove(os.path.join(self.meta_dir, name))
+            raise CommitConflictError(
+                f"{self.root}: snapshot {snap_id} was committed by another "
+                "writer") from None
         tmp = self._hint_path() + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
             f.write(str(snap_id))
         os.replace(tmp, self._hint_path())  # the atomic swap
+        for p in dropped:
+            shutil.rmtree(self.partition_path(p), ignore_errors=True)
         return snap_id
 
     # -- read path -----------------------------------------------------------
@@ -301,14 +279,21 @@ class IcebergishTable:
         partitions are handed to the reader — partition pruning happens at
         the metadata level, mirroring geolake's attribute filters
         (datastore.py:420-423)."""
-        manifests = self.manifests()
+        parts = self.committed_partitions()
         if partition_filter is not None:
-            manifests = [m for m in manifests if partition_filter(m["partition"])]
-        if not manifests:
-            raise ValueError("no live partitions (empty table or all pruned)")
-        paths = [self.partition_path(m["partition"]) for m in manifests]
-        df = spark.read.option("basePath", self.data_dir).parquet(*paths)
-        return df
+            parts = [p for p in parts if partition_filter(p)]
+        if not parts:
+            raise ValueError(f"{self.root}: no live partitions (empty table "
+                             "or all pruned)")
+        return self._scan(spark, parts)
+
+    def _scan(self, spark: SparkSession, partitions: list[dict]) -> DataFrame:
+        """The one reader over table data: exactly these partitions'
+        directories, typed by the table-spec schema (no footer inference).
+        No partitions -> an empty frame with that schema."""
+        schema = StructType.fromJson(self.table_spec()["schema"])
+        return (spark.read.schema(schema).option("basePath", self.data_dir)
+                .parquet(*[self.partition_path(p) for p in partitions]))
 
     def read_changes(self, spark: SparkSession, from_snap: int | None,
                      to_snap: int | None = None) -> DataFrame:
@@ -323,12 +308,7 @@ class IcebergishTable:
         :meth:`diff` time-travel note).  Nothing changed -> an empty
         DataFrame with the table schema."""
         d = self.diff(from_snap, to_snap)
-        parts = d["added"] + d["rewritten"]
-        if not parts:
-            schema = StructType.fromJson(self.table_spec()["schema"])
-            return spark.createDataFrame([], schema)
-        paths = [self.partition_path(p) for p in parts]
-        return spark.read.option("basePath", self.data_dir).parquet(*paths)
+        return self._scan(spark, d["added"] + d["rewritten"])
 
     def stats_prune(self, col: str, lo=None, hi=None) -> tuple[list, int]:
         """Data skipping on manifest column stats: (kept manifests,
@@ -356,11 +336,7 @@ class IcebergishTable:
         row filter still applies on the survivors, pushed down to the
         parquet scan."""
         kept, _ = self.stats_prune(col, lo, hi)
-        if not kept:
-            schema = StructType.fromJson(self.table_spec()["schema"])
-            return spark.createDataFrame([], schema)
-        paths = [self.partition_path(m["partition"]) for m in kept]
-        df = spark.read.option("basePath", self.data_dir).parquet(*paths)
+        df = self._scan(spark, [m["partition"] for m in kept])
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:

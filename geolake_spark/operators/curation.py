@@ -127,7 +127,7 @@ def capped_by_key(df: DataFrame, key_col: str, order_col: str, cap: int,
     The salting is scale insurance, not a single-box win: per-task
     volume drops salt_buckets-fold, but on one machine the extra
     exchange costs ~2-3× wall on an op that is seconds either way
-    (measured 128M rows / 95%-hot key, BENCH/PLANS.md §13).  Pass
+    (measured 128M rows / 95%-hot key).  Pass
     ``salt_buckets=None`` for the naive single window when the key
     distribution is known benign."""
     final = Window.partitionBy(key_col).orderBy(order_col)

@@ -221,11 +221,7 @@ def _signatures_from_table(sig_plan: DataFrame, root: str,
     work = sig_plan.withColumn(
         "sig_part", F.pmod(F.xxhash64("id"), F.lit(n_parts)))
     write_snapshot(work, table, ["sig_part"], resume=True)
-    if not table.committed_partitions():  # pragma: no cover - safety net
-        raise RuntimeError(f"signature tier commit failed under {root}")
-    spark = sig_plan.sparkSession
-    return (spark.read.option("basePath", table.data_dir)
-            .parquet(table.data_dir).select("id", "minhash"))
+    return table.read(sig_plan.sparkSession).select("id", "minhash")
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
@@ -340,7 +336,7 @@ def minhash_lsh_pairs_incremental(new_df: DataFrame, old: DataFrame,
     small-data convenience) or a ``(id, minhash)`` signatures frame, e.g.
     the snapshot-committed table a previous ``minhash_lsh_pairs(
     signatures_table=)`` run wrote: pass
-    ``spark.read.parquet(table_data_dir).select("id", "minhash")`` and
+    ``IcebergishTable(root).read(spark).select("id", "minhash")`` and
     the old corpus' text is never touched.  A recrawled id present in
     both sides pairs with itself only via distinct ids (strict <), but
     its OLD signature row is the caller's to retire — drop recrawled ids

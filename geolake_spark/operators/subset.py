@@ -35,7 +35,8 @@ def select_variables(df: DataFrame, variables: list[str]) -> DataFrame:
     ``var`` discriminator column -> a filter; wide tables -> column prune."""
     if VAR in df.columns:
         return df.filter(F.col(VAR).isin(variables))
-    keys = [c for c in (TS, LAT, LON, LEVEL) if c in df.columns]
+    keys = [c for c in (TS, LAT, LON, LEVEL)
+            if c in df.columns and c not in variables]
     return df.select(*keys, *variables)
 
 

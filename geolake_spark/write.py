@@ -12,8 +12,9 @@ checkpoints"; reference analogue: request state machine
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from geolake_spark.catalog import IcebergishTable
@@ -55,9 +56,10 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
                    target_file_mb: int | None = None) -> dict:
     """Write df into the table, one snapshot. Returns a summary dict.
 
-    The whole write is ONE distributed job (partitionBy write) plus ONE
-    metrics aggregation — planned/committed partition reconciliation happens
-    on partition *values* (metadata), never on data rows.
+    The whole write is ONE distributed job (partitionBy write, observed for
+    the partition values it wrote) plus ONE metrics aggregation —
+    planned/committed partition reconciliation happens on partition
+    *values* (metadata), never on data rows.
 
     ``repartition=False`` preserves the incoming partitioning/ordering —
     layout.zorder_write pre-arranges rows by (partition, z-value) and a
@@ -97,12 +99,28 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
                                          [match(k) for k in skip_keys])
         work = work.filter(~any_committed)
 
-    planned = [r.asDict() for r in
-               work.select(*partition_cols).distinct().collect()]
-    if not planned:
-        return {"snapshot_id": table.current_snapshot_id(),
-                "written_partitions": 0, "skipped_partitions": len(skip_keys)}
+    metrics = _write_partitions(work, table, partition_cols, lat_col,
+                                lon_col, repartition, target_file_mb)
+    return _commit(table, metrics, len(skip_keys))
 
+
+def _commit(table: IcebergishTable, metrics: list[dict], skipped: int,
+            remove: Sequence[dict] = ()) -> dict:
+    """Commit written manifests and removed partitions as one snapshot
+    (none when there is nothing to change); the write summary."""
+    return {"snapshot_id": (table.commit(metrics, remove)
+                            if metrics or remove
+                            else table.current_snapshot_id()),
+            "written_partitions": len(metrics), "skipped_partitions": skipped,
+            "rows": sum(m["row_count"] for m in metrics)}
+
+
+def _write_partitions(work: DataFrame, table: IcebergishTable,
+                      partition_cols: list[str], lat_col: str = "lat",
+                      lon_col: str = "lon", repartition: bool = True,
+                      target_file_mb: int | None = None) -> list[dict]:
+    """Dynamic-overwrite ``work``'s partitions under the table's data dir;
+    return one manifest per written partition, uncommitted."""
     if target_file_mb is not None:
         assert repartition, "target_file_mb needs the repartition path"
         from geolake_spark.plans.estimate import estimate_df_bytes
@@ -118,26 +136,28 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
         laid_out = work.repartition(*[F.col(c) for c in partition_cols])
     else:
         laid_out = work
+    # observe the frame that is written (not an input below a shuffle, which
+    # the optimizer may prune away on empty input and leave no metrics)
+    written = Observation()
     (laid_out
+     .observe(written, F.collect_set(F.struct(*partition_cols)).alias("p"))
      .write.mode("overwrite")
      .partitionBy(*partition_cols)
      .option("partitionOverwriteMode", "dynamic")
      .parquet(table.data_dir))
+    planned = [r.asDict() for r in written.get["p"]]
+    if not planned:
+        return []
 
     # lineage metrics from the files just written (column-pruned scan of the
     # new partitions only): avoids re-running the whole upstream pipeline a
     # second time (pandas-UDF enrichment is expensive) and doubles as a
     # read-back validation of the write.
-    spark = df.sparkSession
-    back = spark.read.option("basePath", table.data_dir).parquet(
-        *[table.partition_path(p) for p in planned])
+    back = table._scan(work.sparkSession, planned)
     metrics = partition_metrics(back, partition_cols, lat_col, lon_col)
     for m in metrics:
         m["byte_size"] = _dir_bytes(table.partition_path(m["partition"]))
-    snap_id = table.commit(metrics)
-    return {"snapshot_id": snap_id, "written_partitions": len(metrics),
-            "skipped_partitions": len(skip_keys),
-            "rows": sum(m["row_count"] for m in metrics)}
+    return metrics
 
 
 def merge_snapshot(updates: DataFrame, table: IcebergishTable,
@@ -210,16 +230,14 @@ def merge_snapshot(updates: DataFrame, table: IcebergishTable,
                      .join(deletes.select(*key_cols).distinct(),
                            key_cols, "left_semi").count()) if hit else 0
 
-    out = write_snapshot(merged, table, part_cols)
-    if deletes is not None and hit:
-        # a partition whose rows were ALL deleted has nothing in `merged`,
-        # so dynamic overwrite never touches it — drop it explicitly
-        remaining = {tuple(r[c] for c in part_cols)
-                     for r in merged.select(*part_cols).distinct().collect()}
-        emptied = [dict(zip(part_cols, k)) for k in sorted(hit - remaining)]
-        if emptied:
-            out["snapshot_id"] = table.drop_partitions(emptied)
-            out["dropped_partitions"] = len(emptied)
+    metrics = _write_partitions(merged, table, part_cols)
+    # a partition whose rows were ALL deleted has nothing in `merged`, so
+    # dynamic overwrite never touches it — the same commit drops it
+    written = {tuple(m["partition"][c] for c in part_cols) for m in metrics}
+    emptied = [dict(zip(part_cols, k)) for k in sorted(hit - written)]
+    out = _commit(table, metrics, 0, emptied)
+    if emptied:
+        out["dropped_partitions"] = len(emptied)
     out["merged_partitions"] = len(affected)
     out["deleted_rows"] = n_deleted
     return out

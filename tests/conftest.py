@@ -12,7 +12,7 @@ from geolake_spark.sources import synth  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="geolake_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="geolake_tests")
     yield s
     s.stop()
 

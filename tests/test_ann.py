@@ -113,9 +113,8 @@ def test_ivf_sf1_scale(spark):
     """100 TB-path wiring at scale: distributed spherical k-means
     (~sqrt(N) lists) over 200k 64-dim clustered embeddings + IVF query,
     recall@10 >= 0.9 vs the exact brute force on the same probes (VERDICT
-    r2 #7).  The full-sf1 (500k, 707-list) variant runs in bench.py's
-    ivf_train/ivf_query lines — this test keeps the pytest gate under
-    ~2 min while exercising the identical code path."""
+    r2 #7).  This test keeps the pytest gate under ~2 min while
+    exercising the code path of the full-sf1 (500k, 707-list) build."""
     from geolake_spark.sources import synth
     emb = spark.read.parquet(
         synth.ensure_embeddings("/root/repo/data", 200_000))

@@ -114,9 +114,12 @@ def test_merge_snapshot_new_partition_and_delete(spark, table):
                                 ["url", "lang", "lat", "lon"])
     dels = spark.createDataFrame(
         [(f"u{i}-de", "de") for i in range(20)], ["url", "lang"])
+    pre_snap = table.current_snapshot_id()
     info = merge_snapshot(ups, table, key_cols=["url"], deletes=dels)
     assert info["deleted_rows"] == 20
     assert info["dropped_partitions"] == 1
+    # upsert and drop land as ONE snapshot
+    assert table.current_snapshot_id() == info["snapshot_id"] == pre_snap + 1
     back = table.read(spark)
     assert back.filter(F.col("lang") == "de").count() == 0
     assert back.filter(F.col("lang") == "it").count() == 1
@@ -138,6 +141,28 @@ def test_merge_snapshot_partial_delete(spark, table):
     back = table.read(spark)
     assert back.count() == 19
     assert back.filter(F.col("url") == "u3-en").count() == 0
+
+
+def test_commit_conflict_leaves_winner(table, monkeypatch):
+    """A writer that loses the race for snapshot N gets a named error; the
+    winner's snap-N.json, the hint and the manifest set stay as they were."""
+    from geolake_spark.catalog import CommitConflictError
+    table.init('{"type": "struct", "fields": []}', ["lang"])
+    table.commit([{"partition": {"lang": "en"}, "row_count": 1}])
+    stale = table.snapshot()
+    won = table.commit([{"partition": {"lang": "de"}, "row_count": 2}])
+    with open(table._snap_path(won)) as f:
+        won_json = f.read()
+    metadata = sorted(os.listdir(table.meta_dir))
+    loser = IcebergishTable(table.root)
+    # the loser planned its commit on the snapshot before the winner's
+    monkeypatch.setattr(loser, "snapshot", lambda snap_id=None: stale)
+    with pytest.raises(CommitConflictError, match=f"snapshot {won}"):
+        loser.commit([{"partition": {"lang": "fr"}, "row_count": 3}])
+    assert table.current_snapshot_id() == won
+    with open(table._snap_path(won)) as f:
+        assert f.read() == won_json
+    assert sorted(os.listdir(table.meta_dir)) == metadata
 
 
 def test_column_stats_data_skipping(spark, table):

@@ -530,9 +530,19 @@ def test_minhash_signatures_table_resume(spark, tmp_path):
                 dedup.minhash_lsh_pairs(scrambled, threshold=0.5,
                                         signatures_table=root).collect())
     assert p2 == p1
+    # the tier is read through the manifests: a partition directory that
+    # no snapshot lists (here a stray copy of a committed one) is ignored
+    import shutil
+    from geolake_spark.catalog import IcebergishTable
+    table = IcebergishTable(root)
+    shutil.copytree(table.partition_path(table.committed_partitions()[0]),
+                    table.partition_path({"sig_part": 99}))
+    sigs = dedup._signatures_from_table(dedup.minhash_signatures(df), root,
+                                        dedup.SIGNATURE_PARTITIONS)
+    assert sorted(r.id for r in sigs.select("id").collect()) == \
+        sorted(r[0] for r in rows)
     # a kill BEFORE the commit leaves no snapshot -> full recompute, same
     # pairs from the true corpus
-    import shutil
     shutil.rmtree(os.path.join(root, "metadata"))
     shutil.rmtree(os.path.join(root, "data"))
     p3 = sorted((r["id_a"], r["id_b"]) for r in

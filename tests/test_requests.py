@@ -179,6 +179,42 @@ def test_format_sinks(catalog, spark, tmp_path):
     with pytest.raises(ValueError, match="format"):
         write_result(spark.range(1), str(tmp_path / "x"), "netcdf")
 
+    # a ``variable`` list naming a key column (lat) projects it once, so
+    # every sink writes instead of failing on a duplicate column
+    for fmt in ("parquet", "json", "geojson"):
+        rid = catalog.submit_execute(
+            "web", "pages", {"variable": ["lat", "url"],
+                             "filters": {"lang": "de"}, "format": fmt})
+        assert catalog.requests.wait(rid, timeout_s=120) == "DONE", \
+            catalog.get_request_status(rid)
+
+
+def test_requests_manager_created_once_across_threads(spark, tmp_path):
+    """Two first async calls at once share one RequestManager."""
+    import sys
+    import threading
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for i in range(20):
+            cat = Catalog(spark, store_dir=str(tmp_path / f"store{i}"))
+            start = threading.Barrier(2, timeout=30)
+            got = []
+
+            def first_call():
+                start.wait()
+                got.append(cat.requests)
+
+            threads = [threading.Thread(target=first_call) for _ in range(2)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+                assert not t.is_alive()
+            assert len(got) == 2 and got[0] is got[1]
+    finally:
+        sys.setswitchinterval(switch)
+
 
 def test_warm_cache_preopens_products(spark, synth_paths):
     """Startup metadata warm-up (reference on_startup.py:9-15 +

@@ -28,6 +28,9 @@ def test_attribute_filters_prune(obs, obs_pdf):
 def test_variable_projection(obs, obs_pdf):
     out = subset.select_variables(obs, ["tas"])
     assert out.count() == (obs_pdf["var"] == "tas").sum()
+    # wide table: a variable that is also a key column is projected once
+    wide = subset.select_variables(obs.drop("var"), ["lat", "value"])
+    assert wide.columns == ["ts", "lon", "level", "lat", "value"]
 
 
 def test_bbox(obs, obs_pdf):
