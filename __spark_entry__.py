@@ -144,7 +144,8 @@ def q_pip_rect_join(spark, sf_dir):
 def q_knn_docs(spark, sf_dir):
     d = _docs_geo(spark, sf_dir)
     probes = pd.DataFrame(_KNN_PROBES, columns=["query_id", "lat", "lon"])
-    out = joins.knn_join(d, probes, k=5, res=5, id_cols=["doc_id"])
+    out = joins.knn_join_table(d, spark.createDataFrame(probes), k=5, res=5,
+                               id_cols=["doc_id"])
     return out.select("query_id", "doc_id",
                       F.round("dist_km", 6).alias("dist_km"),
                       F.col("rank").cast("bigint").alias("rank"))

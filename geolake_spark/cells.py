@@ -153,8 +153,8 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     """All cells within Chebyshev distance ``k`` (the (2k+1)^2 disk),
     with longitude wraparound and latitude clamping.
 
-    This is the candidate-generation primitive for kNN ring expansion
-    (SURVEY.md §2.3 J2; reference nearest-select analogue
+    The kNN join sizes its search boxes from histogram counts over these
+    disks (SURVEY.md §2.3 J2; reference nearest-select analogue
     datastore.py:444-455).
     """
     res = int(cell_res(cell))
@@ -249,8 +249,9 @@ def radius_cover(lat: float, lon: float, radius_km: float, res: int,
       with ``cos(phi2_min)`` the smallest cosine over the band.  The naive
       parallel-arc bound (``dlam <= R / (111 cos phi)``) UNDERestimates the
       reachable lon gap because geodesics cut poleward of their endpoints
-      (the same trap :func:`~geolake_spark.operators.joins.knn_join_table`'s
-      ``dmin_km`` documents) — the identity bound is exact.  When the band
+      (the same trap
+      :func:`~geolake_spark.operators.joins._meridian_segment_dist`
+      documents) — the identity bound is exact.  When the band
       touches a pole the denominator hits 0 and the cover degrades to
       all-longitudes for the band, which subsumes over-pole reachability.
 

@@ -530,7 +530,11 @@ def dot_col(a: Column, b: Column, dim: int | None = None) -> Column:
     start, same left-to-right order) but inside whole-stage codegen;
     higher-order functions are CodegenFallback, and the interpreted
     per-row fold dominated the candidate-scoring stages (the
-    ``_adc_dist_expr`` r6 measurement, same fix)."""
+    ``_adc_dist_expr`` r6 measurement, same fix).
+
+    With ``dim``, every vector must have exactly ``dim`` elements: a
+    shorter one fails the query (ANSI ``element_at`` index error) and a
+    longer one is truncated to its first ``dim`` elements."""
     if dim is not None:
         acc = F.lit(0.0)
         for i in range(dim):
@@ -541,7 +545,8 @@ def dot_col(a: Column, b: Column, dim: int | None = None) -> Column:
 
 
 def norm_col(a: Column, dim: int | None = None) -> Column:
-    """Sequential-fold L2 norm; ``dim`` unrolls it (see :func:`dot_col`)."""
+    """Sequential-fold L2 norm; ``dim`` unrolls it and then every vector
+    must have exactly ``dim`` elements (see :func:`dot_col`)."""
     if dim is not None:
         acc = F.lit(0.0)
         for i in range(dim):

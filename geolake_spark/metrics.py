@@ -7,61 +7,74 @@ aggregation per commit — never a driver-side loop over rows.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from geolake_spark.functions.geo import grid_cell_col
 
 HISTOGRAM_RES = 5
 
 
+def _spark_order(v):
+    """Sort key matching Spark's double ordering: NaN above every number."""
+    return (isinstance(v, float) and math.isnan(v), v)
+
+
 def partition_metrics(df: DataFrame, partition_cols: list[str],
                       lat_col: str = "lat", lon_col: str = "lon") -> list[dict]:
-    """One dict per partition: {partition, row_count, cell_histogram}.
+    """One dict per partition: {partition, row_count, cell_histogram,
+    column_stats}.
 
     cell_histogram: res-5 grid-cell -> row count (the coarse spatial
-    fingerprint recorded in every manifest).
+    fingerprint recorded in every manifest).  column_stats: per numeric
+    column min/max/null-count — the Iceberg-style data-skipping payload
+    (catalog.read_where prunes partitions whose [min, max] misses the
+    predicate range without opening a file).  Strings are deliberately
+    excluded: a truncated string max is NOT an upper bound (Iceberg solves
+    this with truncate+increment; numeric + epoch-micro predicates carry
+    the pruning value here).
+
+    Both come from ONE (partition, cell) group-by; the driver reduces its
+    rows per partition: counts and null counts add, min of mins, max of
+    maxes (in Spark's order, where NaN is the largest double).
     """
+    num = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+           T.FloatType, T.DoubleType)
+    stat_cols = [f.name for f in df.schema.fields
+                 if isinstance(f.dataType, num)
+                 and f.name not in partition_cols]
     has_geo = lat_col in df.columns and lon_col in df.columns
     cell = (grid_cell_col(F.col(lat_col), F.col(lon_col), HISTOGRAM_RES)
             if has_geo else F.lit(-1))
+    aggs = [F.count("*").alias("cnt")]
+    for c in stat_cols:
+        aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}"),
+                 F.sum(F.col(c).isNull().cast("long")).alias(f"nl_{c}")]
     agg = (df.withColumn("_hcell", cell)
-           .groupBy(*partition_cols, "_hcell")
-           .agg(F.count("*").alias("cnt")))
+           .groupBy(*partition_cols, "_hcell").agg(*aggs))
     rows = agg.collect()  # size = partitions x occupied coarse cells (small)
     out: dict[tuple, dict] = {}
     for r in rows:
         key = tuple(r[c] for c in partition_cols)
         entry = out.setdefault(key, {
             "partition": {c: r[c] for c in partition_cols},
-            "row_count": 0, "cell_histogram": {}, "column_stats": {}})
+            "row_count": 0, "cell_histogram": {},
+            "column_stats": {c: {"min": None, "max": None, "nulls": 0}
+                             for c in stat_cols}})
         entry["row_count"] += r["cnt"]
         entry["cell_histogram"][str(r["_hcell"])] = r["cnt"]
-
-    # per-column min/max/null-count for numeric columns — the Iceberg-style
-    # data-skipping payload (catalog.read_where prunes partitions whose
-    # [min, max] misses the predicate range without opening a file).  One
-    # extra distributed aggregation per commit, partitions-sized output.
-    # Strings are deliberately excluded: a truncated string max is NOT an
-    # upper bound (Iceberg solves this with truncate+increment; numeric +
-    # epoch-micro predicates carry the pruning value here).
-    from pyspark.sql import types as T
-    num = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-           T.FloatType, T.DoubleType)
-    stat_cols = [f.name for f in df.schema.fields
-                 if isinstance(f.dataType, num)
-                 and f.name not in partition_cols]
-    if stat_cols and out:
-        aggs = []
         for c in stat_cols:
-            aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}"),
-                     F.sum(F.col(c).isNull().cast("long")).alias(f"nl_{c}")]
-        for r in df.groupBy(*partition_cols).agg(*aggs).collect():
-            key = tuple(r[c] for c in partition_cols)
-            if key in out:
-                out[key]["column_stats"] = {
-                    c: {"min": r[f"mn_{c}"], "max": r[f"mx_{c}"],
-                        "nulls": r[f"nl_{c}"]} for c in stat_cols}
+            st = entry["column_stats"][c]
+            mn, mx = r[f"mn_{c}"], r[f"mx_{c}"]
+            if mn is not None:  # else the cell holds only nulls of c
+                st["min"] = mn if st["min"] is None else min(
+                    st["min"], mn, key=_spark_order)
+                st["max"] = mx if st["max"] is None else max(
+                    st["max"], mx, key=_spark_order)
+            st["nulls"] += r[f"nl_{c}"]
     return list(out.values())
 
 

@@ -535,14 +535,18 @@ def demo_pq_codebooks_sql(dim: int = 64, m: int = 16, ksub: int = 64) -> str:
 
 def _flat_vectors_arrow(vec_arr, dim: int) -> np.ndarray:
     """(n, dim) float64 from an Arrow list<float64> column — zero per-row
-    Python objects (the values buffer is reshaped directly).  Falls back
-    to the per-row path for ragged/null batches (never the case for the
-    fixed-dim embedding tables, but cheap insurance)."""
-    flat = vec_arr.flatten().to_numpy(zero_copy_only=False)
-    n = len(vec_arr)
-    if len(flat) == n * dim and vec_arr.null_count == 0:
-        return np.ascontiguousarray(flat, dtype=np.float64).reshape(n, dim)
-    return np.array(vec_arr.to_pylist(), dtype=np.float64).reshape(n, dim)
+    Python objects (the values buffer is reshaped directly).  A null
+    vector, a null element or a vector whose length is not ``dim`` raises
+    ``ValueError``."""
+    import pyarrow.compute as pc
+    flat = vec_arr.flatten()
+    lengths = pc.list_value_length(vec_arr)
+    if (vec_arr.null_count or flat.null_count
+            or not pc.all(pc.equal(lengths, dim), min_count=0).as_py()):
+        raise ValueError(f"vectors must be non-null with exactly dim={dim} "
+                         f"non-null elements")
+    return np.ascontiguousarray(flat.to_numpy(zero_copy_only=False),
+                                dtype=np.float64).reshape(len(vec_arr), dim)
 
 
 def _codes_list_array(codes: np.ndarray):

@@ -267,26 +267,26 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # 64-long signatures (~1 KB/pair) through the candidate distinct, and
     # round 3's two-sided self-join shuffled the banded table twice (round
     # 4: one groupBy + in-bucket HOF pairs — see _bucket_pairs).
-    # Signatures re-attach via two joins against the persisted tier, with
-    # the CANDIDATE side explicitly broadcast in both (guide §3.1): the
+    # Signatures re-attach via two joins against the persisted tier.  The
     # planner's size estimate for the cached ArrowEvalPython tier reads
-    # small, so without the hint it broadcast-COLLECTED the whole 520k-row
-    # signature tier as the second join's build side and streamed the tiny
-    # pair table through it (plan-verified r6).  Hinting the pair side
-    # keeps both joins streaming the cached tier map-side — zero exchange
-    # and no tier-sized broadcast.  The hinted side is the candidate set,
-    # which the bucket cap bounds per bucket; for corpora whose TOTAL pair
-    # count outgrows a broadcast, the hint degrades to the planner's
-    # shuffle join (Spark drops unbuildable hints at the 8 GB relation
-    # cap) — same correctness either way.
+    # small (an array column counts a few bytes), so left to itself it
+    # broadcast-COLLECTS the whole signature tier as a build side (r6: all
+    # 520k rows).  The first join therefore broadcasts the candidate side
+    # (16 B/pair, guide §3.1) and streams the tier map-side.  The second
+    # join's left side carries a signature per pair, so it must not be
+    # broadcast either: Spark 4.1.2 raises above the broadcast cap (8 GB /
+    # 512M rows) instead of falling back to a shuffle join, and the driver
+    # can run out of memory well before that.  A shuffle-hash hint on the
+    # tier makes that join shuffle both sides and build per-partition hash
+    # tables from the tier, at any corpus or pair volume.
     cand = _bucket_pairs(banded, ["band_id", "band_hash"], cap=bucket_cap,
                          stats=stats)
-    pairs = (F.broadcast(
-        F.broadcast(cand)
-        .join(sigs.select(F.col("id").alias("id_a"),
-                          F.col("minhash").alias("mh_a")), "id_a"))
-        .join(sigs.select(F.col("id").alias("id_b"),
-                          F.col("minhash").alias("mh_b")), "id_b"))
+    pairs = (F.broadcast(cand)
+             .join(sigs.select(F.col("id").alias("id_a"),
+                               F.col("minhash").alias("mh_a")), "id_a")
+             .join(sigs.select(F.col("id").alias("id_b"),
+                               F.col("minhash").alias("mh_b"))
+                   .hint("shuffle_hash"), "id_b"))
     matches = F.size(F.filter(F.zip_with("mh_a", "mh_b", lambda x, y:
                                          (x == y).cast("int")), lambda v: v == 1))
     return (pairs.withColumn("sig_sim", matches / F.lit(float(num_perm)))

@@ -957,8 +957,8 @@ def track_hausdorff(events: DataFrame, res: int, min_common: int = 1,
     int64, no trig, no Python.  Entities with million-point tracks
     should be pre-thinned with :func:`simplify_track` (stated).
     Reference analogue: none (geolake joins points to polygons, not
-    tracks to tracks); the grid-blocked candidate shape mirrors its
-    kNN ring expansion (operators/joins.py kNN docstring)."""
+    tracks to tracks); the grid-blocked candidate shape mirrors the
+    cell-cover equi-join of operators/joins.py ``radius_join``."""
     from geolake_spark.operators.dedup import _bucket_pairs
 
     from ..functions.geo import grid_cell_col

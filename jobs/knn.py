@@ -21,15 +21,13 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
-    import pyarrow.parquet as pq
-
     from geolake_spark.operators import joins
     from geolake_spark.session import get_spark
 
     spark = get_spark("knn", cores=args.cores)
     pages = spark.read.parquet(args.pages)
-    probes = pq.read_table(args.probes).to_pandas()[["query_id", "lat", "lon"]]
-    out = joins.knn_join(pages, probes, k=args.k, res=args.res)
+    probes = spark.read.parquet(args.probes)
+    out = joins.knn_join_table(pages, probes, k=args.k, res=args.res)
     out.write.mode("overwrite").parquet(args.output)
     print({"rows": spark.read.parquet(args.output).count()})
     spark.stop()

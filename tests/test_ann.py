@@ -166,6 +166,19 @@ def test_pq_encode_matches_numpy(vectors):
     assert all(0 <= c < 16 for v in enc.values() for c in v)
 
 
+def test_flat_vectors_arrow_rejects_null_and_ragged():
+    """Null vectors, null elements and wrong lengths raise a ValueError
+    naming the expected dim — including a ragged batch whose total element
+    count still equals n * dim, which a plain reshape would accept."""
+    import pyarrow as pa
+    good = ann._flat_vectors_arrow(pa.array([[1.0, 2.0], [3.0, 4.0]]), 2)
+    assert good.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    for bad in ([[1.0, 2.0], None], [[1.0, None], [3.0, 4.0]],
+                [[1.0, 2.0, 3.0], [4.0]], [[1.0], [2.0]]):
+        with pytest.raises(ValueError, match="dim=2"):
+            ann._flat_vectors_arrow(pa.array(bad), 2)
+
+
 def test_pq_adc_matches_numpy_and_self_rank(vectors, probes):
     cb = ann.pq_train(vectors, m=8, ksub=16, dim=32)
     enc = ann.pq_encode(vectors, cb)

@@ -44,12 +44,30 @@ def test_minhash_estimates_jaccard():
 
 
 def test_minhash_lsh_finds_planted_pairs(docs):
-    out = dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
+    found = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+    out = found.collect()
     pairs = {(r["id_a"], r["id_b"]) for r in out}
     assert (0, 100) in pairs  # exact dup -> sig_sim 1.0
     assert (1, 101) in pairs  # near dup
     # permuted docs share words but not 3-shingles -> no false positives
     assert all(b in (100, 101) for _, b in pairs)
+    # the id_b signature join broadcasts neither the pairs-plus-signature
+    # side (Spark raises above its broadcast cap) nor the signature tier
+    plan = found._jdf.queryExecution().executedPlan().toString()
+    second = [ln for ln in plan.splitlines() if "Join [id_b" in ln]
+    assert second and all("ShuffledHashJoin" in ln for ln in second), plan
+
+
+def test_cosine_col_with_dim_rejects_short_vector(spark):
+    """With ``dim`` the unrolled fold needs vectors of exactly dim
+    elements: a shorter one fails the query instead of giving a cosine."""
+    cos = sim.cosine_col(F.col("a"), F.col("b"), dim=3)
+    schema = "a array<double>, b array<double>"
+    ok = spark.createDataFrame([([1.0, 2.0, 2.0], [2.0, 1.0, 2.0])], schema)
+    assert ok.select(cos).first()[0] == pytest.approx(8.0 / 9.0)
+    short = spark.createDataFrame([([1.0, 2.0], [2.0, 1.0, 2.0])], schema)
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+        short.select(cos).collect()
 
 
 def test_simhash_planted(docs):

@@ -88,12 +88,13 @@ def test_pip_cover_classification():
                                               float(s), float(n))
 
 
-def test_knn_matches_brute_force(pages, pages_pdf):
+def test_knn_matches_brute_force(spark, pages, pages_pdf):
     probes = pd.DataFrame({
         "query_id": [1, 2, 3],
         "lat": [10.0, -40.0, 65.0],
         "lon": [25.0, 120.0, -100.0]})
-    out = joins.knn_join(pages, probes, k=4, res=5)
+    out = joins.knn_join_table(pages, spark.createDataFrame(probes), k=4,
+                               res=5)
     res = (out.select("query_id", "url", "rank").toPandas()
            .sort_values(["query_id", "rank"]))
     for _, pr in probes.iterrows():
@@ -106,8 +107,8 @@ def test_knn_matches_brute_force(pages, pages_pdf):
 
 
 def test_knn_table_matches_brute_force(spark, pages, pages_pdf):
-    """Distributed probe-table kNN (no per-probe driver work) vs brute
-    force, 60 probes spread worldwide including polar/antimeridian."""
+    """Probe-table kNN vs brute force, 60 probes spread worldwide
+    including polar/antimeridian."""
     from geolake_spark.functions.geo import geocode_lat_col, geocode_lon_col
     import pyspark.sql.functions as F
     probes = (spark.range(60)
@@ -161,8 +162,8 @@ def test_knn_table_over_pole_exact(spark):
 
 
 def test_knn_table_k_exceeds_points(spark):
-    """k > |points| resolves via world coverage and returns all points."""
-    import pyspark.sql.functions as F
+    """k > |points| resolves via world coverage and returns all points; an
+    empty probe table gives an empty frame with the result columns."""
     pdf = pd.DataFrame({"url": ["a", "b"], "lat": [10.0, -50.0],
                         "lon": [20.0, 170.0]})
     pts = spark.createDataFrame(pdf)
@@ -170,6 +171,39 @@ def test_knn_table_k_exceeds_points(spark):
         pd.DataFrame({"query_id": [1], "lat": [0.0], "lon": [0.0]}))
     out = joins.knn_join_table(pts, probes, k=5, res=4).collect()
     assert len(out) == 2
+    empty = joins.knn_join_table(pts, probes.limit(0), k=5, res=4)
+    assert empty.columns == ["query_id", "q_lat", "q_lon", "url",
+                             "dist_km", "rank"]
+    assert empty.count() == 0
+
+
+def test_knn_table_face_bound_exact(spark):
+    """Regression: the certificate must use the exact great-circle distance
+    to the box's faces.  The probe's first res-5 box ends at lat 2.1125;
+    O sits just beyond that north face, F inside the box is 5e-5 km
+    farther than O, and the literal 111.195 km/deg face bound (312.735937
+    km, above the exact 312.73573) certified F."""
+    q_lat, q_lon = -0.7, 0.7
+    o_lat = 2.1125 + 1e-6
+    d_f = 312.735890
+    f_lat = -3.5
+    hav = lambda x: np.sin(x / 2.0) ** 2  # noqa: E731
+    p1, p2 = np.radians(q_lat), np.radians(f_lat)
+    b = np.degrees(2.0 * np.arcsin(np.sqrt(
+        (hav(d_f / cells.EARTH_RADIUS_KM) - hav(p2 - p1))
+        / (np.cos(p1) * np.cos(p2)))))
+    pdf = pd.DataFrame({"url": ["d1", "d2", "O", "F"],
+                        "lat": [1.40, -2.81, o_lat, f_lat],
+                        "lon": [2.81, -1.40, q_lon, q_lon + b]})
+    d = cells.haversine_km(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(),
+                           q_lat, q_lon)
+    assert abs(d[3] - d_f) < 1e-6 and d[2] < d[3] < 312.735937
+    probes = spark.createDataFrame(
+        pd.DataFrame({"query_id": [1], "lat": [q_lat], "lon": [q_lon]}))
+    out = joins.knn_join_table(spark.createDataFrame(pdf), probes, k=1,
+                               res=5).collect()
+    assert [r["url"] for r in out] == [pdf["url"][int(np.argmin(d))]]
+    assert abs(out[0]["dist_km"] - d.min()) < 1e-6
 
 
 def test_knn_deterministic_tiebreak(spark):
@@ -179,21 +213,21 @@ def test_knn_deterministic_tiebreak(spark):
                         "lon": [0.0, 0.0, 0.0]})
     df = spark.createDataFrame(pdf)
     probes = pd.DataFrame({"query_id": [1], "lat": [0.0], "lon": [0.0]})
-    out = joins.knn_join(df, probes, k=3, res=3)
+    out = joins.knn_join_table(df, spark.createDataFrame(probes), k=3,
+                               res=3)
     got = [r["url"] for r in out.orderBy("rank").collect()]
     assert got[:2] == ["a", "b"]  # same distance -> url ascending
 
 
 def test_knn_table_adaptive_res_matches_brute_force(spark, pages, pages_pdf):
-    """res=None (single-scan histogram drives BOTH the adaptive resolution
-    choice and the working histogram — round-3 refactor) stays exact."""
+    """The default resolution (no ``res`` given) stays exact."""
     from geolake_spark.functions.geo import geocode_lat_col, geocode_lon_col
     import pyspark.sql.functions as F
     probes = (spark.range(12)
               .select(F.col("id").alias("query_id"),
                       geocode_lat_col(F.col("id") + 77000).alias("lat"),
                       geocode_lon_col(F.col("id") + 77000).alias("lon")))
-    out = joins.knn_join_table(pages, probes, k=3)  # res=None
+    out = joins.knn_join_table(pages, probes, k=3)
     got = (out.select("query_id", "url", "rank").toPandas()
            .sort_values(["query_id", "rank"]))
     for _, pr in probes.toPandas().iterrows():
