@@ -237,16 +237,23 @@ class Catalog:
             return p.attr_loader(self.spark, attr_filters), p
         return p.loader(self.spark), p
 
+    def _plan(self, dataset_id: str, product_id: str,
+              query: GeoQuery | dict | str, roles: list[str] | None
+              ) -> tuple[GeoQuery, DataFrame, int, Product]:
+        """Parse, load (attribute filters prune pattern files), subset and
+        size one request: (query, result, estimated bytes, product)."""
+        q = query if isinstance(query, GeoQuery) else GeoQuery.parse(query)
+        df, p = self._load(dataset_id, product_id, roles,
+                           attr_filters=q.filters or None)
+        result = subset.subset(df, q)
+        return q, result, est.estimate_df_bytes(result), p
+
     def estimate(self, dataset_id: str, product_id: str,
                  query: GeoQuery | dict | str,
                  roles: list[str] | None = None) -> dict:
         """Metadata-only size estimate (datastore.py:363-394 + unit
         formatting with the 0.01 floor, api_utils.py:33-73)."""
-        q = query if isinstance(query, GeoQuery) else GeoQuery.parse(query)
-        df, _ = self._load(dataset_id, product_id, roles,
-                           attr_filters=q.filters or None)
-        result = subset.subset(df, q)
-        n = est.estimate_df_bytes(result)
+        _, _, n, _ = self._plan(dataset_id, product_id, query, roles)
         val, unit = est.human_size(n)
         return {"value": val, "units": unit, "bytes": n}
 
@@ -255,12 +262,8 @@ class Catalog:
                 roles: list[str] | None = None) -> DataFrame:
         """Estimate-then-execute with the GB admission guard
         (dataset.py:253-267); returns the lazy result DataFrame."""
-        q = query if isinstance(query, GeoQuery) else GeoQuery.parse(query)
-        df, p = self._load(dataset_id, product_id, roles,
-                           attr_filters=q.filters or None)
-        result = subset.subset(df, q)
-        est.admit(est.estimate_df_bytes(result),
-                  max_gb=p.maximum_query_size_gb)
+        _, result, n, p = self._plan(dataset_id, product_id, query, roles)
+        est.admit(n, max_gb=p.maximum_query_size_gb)
         return result
 
     def run_workflow(self, tasklist: TaskList | list | dict | str,
@@ -282,11 +285,7 @@ class Catalog:
                        timeout_s: float | None = None) -> int:
         """POST /execute async flavour: admission-check the plan, then hand
         it to the request manager; the query's ``format`` picks the sink."""
-        q = query if isinstance(query, GeoQuery) else GeoQuery.parse(query)
-        df, p = self._load(dataset_id, product_id, roles,
-                           attr_filters=q.filters or None)
-        result = subset.subset(df, q)
-        n = est.estimate_df_bytes(result)
+        q, result, n, p = self._plan(dataset_id, product_id, query, roles)
         est.admit(n, max_gb=p.maximum_query_size_gb)
         return self.requests.submit(
             lambda: result, dataset_id, product_id,

@@ -156,7 +156,8 @@ class IcebergishTable:
         references.  Data files are never touched here (partition
         overwrite already replaces them in place).  ``history()``/
         ``diff()`` remain valid for retained snapshots only."""
-        assert keep_last >= 1
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be at least 1, got {keep_last}")
         hist = self.history()
         keep = [h["snapshot_id"] for h in hist[-keep_last:]]
         referenced: set[str] = set()

@@ -43,6 +43,16 @@ class GeoQuery:
             raise GeoQueryError("area and location are mutually exclusive")
         if isinstance(self.variable, str):
             self.variable = [self.variable]
+        if self.location is not None:
+            # each latitude pairs with one longitude; a scalar is one probe
+            n_lat, n_lon = (len(v) if isinstance(v, (list, tuple)) else 1
+                            for v in (self.location["latitude"],
+                                      self.location["longitude"]))
+            if n_lat != n_lon:
+                raise GeoQueryError(
+                    f"location has {n_lat} latitudes and {n_lon} longitudes")
+            if n_lat == 0:
+                raise GeoQueryError("location has no probes")
 
     @classmethod
     def parse(cls, payload: str | dict) -> "GeoQuery":

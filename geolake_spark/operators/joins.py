@@ -158,8 +158,8 @@ def build_pip_cover(polygons: list[dict], res: int = DEFAULT_PIP_RES) -> pd.Data
 
 # Cover DataFrames are cached per (session, polygon set, res): building one
 # via createDataFrame(pandas-with-nested-arrays) costs >1s of driver time
-# (pickle serialization), while a pyarrow parquet round-trip through tmpfs is
-# ~50ms and the cached read is free on reuse.
+# (pickle serialization), while a pyarrow parquet round-trip through the
+# session's local dir is ~50ms and the cached read is free on reuse.
 _COVER_CACHE: dict = {}
 
 
@@ -168,6 +168,7 @@ def _cover_df(spark: SparkSession, cover_pdf: pd.DataFrame,
     import hashlib
     import json
     import os
+    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -185,7 +186,9 @@ def _cover_df(spark: SparkSession, cover_pdf: pd.DataFrame,
                           pa.list_(pa.list_(pa.float64()))),
         "shift": pa.array(cover_pdf["shift"], pa.bool_()),
     })
-    base = os.environ.get("GEOLAKE_LOCAL_DIR", "/dev/shm/spark-tmp")
+    # the session's first spill directory (session.get_spark sets it)
+    base = (spark.sparkContext.getConf().get("spark.local.dir")
+            or tempfile.gettempdir()).split(",")[0]
     os.makedirs(base, exist_ok=True)
     path = os.path.join(base, f"pip-cover-{key[1]}-{res}.parquet")
     if not os.path.exists(path):

@@ -11,7 +11,7 @@ for free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geolake_spark.functions.geo import bbox_filter, haversine_col
@@ -56,63 +56,39 @@ def apply_area(df: DataFrame, area: dict) -> DataFrame:
                                  west=norm(area["west"]), east=norm(area["east"])))
 
 
-MANY_LOCATION_PROBES = 100
-
-
-def apply_location(df: DataFrame, location: dict,
-                   windowed: bool | None = None) -> DataFrame:
+def apply_location(df: DataFrame, location: dict) -> DataFrame:
     """Nearest-gridpoint select per requested location (datastore.py:432-434,
     method="nearest"): for each (lat, lon) probe keep the rows of the single
     nearest distinct grid point.
 
-    Two physical shapes with identical results:
-
-    * few probes (the reference's scalar location lists): one
-      ``orderBy().limit(1)`` plan per probe, unioned — trivial plans, no
-      shuffle of the grid axis;
-    * many probes (> ``MANY_LOCATION_PROBES``, or ``windowed=True``): ONE
-      broadcast of the probe table, one cross join against the distinct
-      grid points and a single windowed 1-NN over ``_pid`` — no per-probe
-      driver loop, probe tables scale to thousands.
+    One plan for any probe count: the probe table ``(_pid, _plat, _plon)``
+    is broadcast and cross joined with the distinct grid points (on a
+    gridded product far fewer than the rows), each probe keeps the minimum
+    ``(distance, lat, lon)`` struct (ties go to the smaller lat, then the
+    smaller lon), and a left-semi join keeps ``df``'s rows at the chosen
+    points, in ``df``'s column order.  A point chosen by several probes is
+    kept once; a row with a null coordinate is never chosen.
     """
     lats = location["latitude"]
     lons = location["longitude"]
     if not isinstance(lats, (list, tuple)):
         lats, lons = [lats], [lons]
-    probes = list(zip(lats, lons))
-    if windowed is None:
-        windowed = len(probes) > MANY_LOCATION_PROBES
-    # distinct grid points (small: a grid axis product), then 1-NN per probe
-    points = df.select(LAT, LON).distinct()
-    if windowed:
-        spark = df.sparkSession
-        probe_df = spark.createDataFrame(
-            [(i, float(la), float(lo)) for i, (la, lo) in enumerate(probes)],
-            ["_pid", "_plat", "_plon"])
-        d = haversine_col(F.col(LAT), F.col(LON),
-                          F.col("_plat"), F.col("_plon"))
-        w = (Window.partitionBy("_pid")
-             .orderBy(F.col("_d").asc(), F.col(LAT).asc(), F.col(LON).asc()))
-        sel = (points.crossJoin(F.broadcast(probe_df))
-               .withColumn("_d", d)
-               .withColumn("_rk", F.row_number().over(w))
-               .filter(F.col("_rk") == 1)
-               .select(LAT, LON).distinct())
-    else:
-        nearest = []
-        for plat, plon in probes:
-            d = haversine_col(F.col(LAT), F.col(LON),
-                              F.lit(float(plat)), F.lit(float(plon)))
-            top = (points.withColumn("_d", d)
-                   .orderBy(F.col("_d").asc(), F.col(LAT).asc(),
-                            F.col(LON).asc())
-                   .limit(1).drop("_d"))
-            nearest.append(top)
-        sel = nearest[0]
-        for t in nearest[1:]:
-            sel = sel.unionByName(t)
-        sel = sel.distinct()
-    return df.join(F.broadcast(sel), on=[LAT, LON], how="inner")
+    # a literal table: no Python-side RDD, so no Python worker starts
+    probes = df.sparkSession.range(1).select(F.inline(F.array(*[
+        F.struct(F.lit(i).alias("_pid"), F.lit(float(la)).alias("_plat"),
+                 F.lit(float(lo)).alias("_plon"))
+        for i, (la, lo) in enumerate(zip(lats, lons))])))
+    d = haversine_col(F.col(LAT), F.col(LON), F.col("_plat"), F.col("_plon"))
+    near = (df.select(LAT, LON)
+            .filter(F.col(LAT).isNotNull() & F.col(LON).isNotNull())
+            .distinct()
+            .crossJoin(F.broadcast(probes))
+            .groupBy("_pid")
+            .agg(F.min(F.struct(d.alias("_d"), LAT, LON)).alias("_n"))
+            .select(F.col(f"_n.{LAT}").alias("_nlat"),
+                    F.col(f"_n.{LON}").alias("_nlon")))
+    on = (F.col(LAT) == F.col("_nlat")) & (F.col(LON) == F.col("_nlon"))
+    return df.join(F.broadcast(near), on, "left_semi")
 
 
 def apply_time(df: DataFrame, time: dict) -> DataFrame:

@@ -34,11 +34,11 @@ def assign_tiles(df: DataFrame, zoom: int,
 def rollup_tiles(df: DataFrame, zoom: int,
                  lat_col: str = "lat", lon_col: str = "lon",
                  salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Per-tile page count + distinct-host estimate, salted two-phase agg.
+    """Exact per-tile page count ``page_count``, salted two-phase agg.
 
     Phase 1 groups by (tile, salt) — map-side combine spreads a hot tile over
-    ``salt_buckets`` reducers; phase 2 merges the partials per tile.  count
-    is exact; distinct hosts use HLL partial merge (approx, stated).
+    ``salt_buckets`` reducers; phase 2 sums the partials per tile.
+    ``salt_buckets <= 0`` groups by tile in one phase.
     """
     tiled = assign_tiles(df, zoom, lat_col, lon_col)
     if salt_buckets <= 0:

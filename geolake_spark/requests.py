@@ -90,7 +90,6 @@ class RequestManager:
         os.makedirs(store_dir, exist_ok=True)
         self._lock = threading.Lock()
         self._requests: dict[int, Request] = {}
-        self._threads: dict[int, threading.Thread] = {}
         self._next_id = 1
         self._load()
 
@@ -206,9 +205,7 @@ class RequestManager:
                 sc.setLocalProperty("spark.job.description", None)
                 sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
-        t = threading.Thread(target=run, name=group, daemon=True)
-        self._threads[rid] = t
-        t.start()
+        threading.Thread(target=run, name=group, daemon=True).start()
         return rid
 
     # -- polling / download (api/app/main.py:256-357) --------------------------

@@ -98,58 +98,12 @@ def pattern_regex(pattern: str) -> tuple[str, list[str]]:
     return "^" + "".join(parts) + "$", fields
 
 
-# Above this many files the default lister switches to the paginated
-# protocol — the shape an object-store listing actually has (one
-# list_objects_v2 call returns at most ~1000 keys; a 100 TB product
-# directory holds millions).  Local directories below it just sort once.
-PAGINATE_THRESHOLD = 2000
-PAGE_SIZE = 1000
-
-
-def _local_fetch_page(directory: str, start_after: str | None,
-                      page_size: int) -> tuple[list[str], str | None]:
-    """One deterministic lexicographic page (``list_objects_v2``
-    emulation): the first ``page_size`` basenames strictly greater than
-    ``start_after``, plus the continuation token (the page's last name)
-    or None on the final page.  A real bucket backend implements this
-    exact signature with one remote call (StartAfter/ContinuationToken);
-    the local emulation re-lists per page because the PROTOCOL — not the
-    local I/O — is what the downstream pruning must be correct against."""
-    import os
-    names = sorted(n for n in os.listdir(directory)
-                   if start_after is None or n > start_after)
-    page = names[:page_size]
-    token = page[-1] if len(names) > page_size else None
-    return page, token
-
-
-def paginated_lister(page_size: int = PAGE_SIZE, fetch_page=_local_fetch_page):
-    """Lister factory driving the paginated protocol: yields basenames
-    lazily page by page, in global lexicographic order, until the backend
-    returns no continuation token.  Plug a bucket backend in via
-    ``fetch_page(directory, start_after, page_size) -> (names, token)``."""
-    def lister(directory: str):
-        token = None
-        while True:
-            names, token = fetch_page(directory, token, page_size)
-            yield from names
-            if token is None:
-                return
-    return lister
-
-
-def default_lister(directory: str):
+def default_lister(directory: str) -> list[str]:
     """Deterministic lister (lexicographic basenames).  The lister seam
     exists because the 100 TB layout is an object store: a bucket lister
     plugs in via ``read_patterned(list_files=...)`` without touching the
-    pruning/scan logic.  Directories above :data:`PAGINATE_THRESHOLD`
-    files go through the paginated protocol (:func:`paginated_lister`) —
-    identical output, exercised continuously so the scale path can't rot."""
+    pruning/scan logic."""
     import os
-    with os.scandir(directory) as it:
-        n = sum(1 for _ in it)
-    if n > PAGINATE_THRESHOLD:
-        return paginated_lister()(directory)
     return sorted(os.listdir(directory))
 
 
@@ -187,8 +141,7 @@ def read_patterned(spark, directory: str, pattern: str,
     rx = re.compile(regex)
     chosen = []
     matched_all = []
-    for fn in sorted(list_files(directory) if list_files
-                     else default_lister(directory)):
+    for fn in sorted((list_files or default_lister)(directory)):
         m = rx.match(fn)
         if not m:
             continue

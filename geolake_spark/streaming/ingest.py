@@ -1,10 +1,9 @@
 """Streaming page ingest: readStream over a parquet drop directory ->
-event-time windowed per-cell counts -> incremental tile refresh.
+event-time windowed per-cell counts -> append-mode parquet sink.
 
-Late data is handled with a watermark on ``warc_ts``; the foreachBatch sink
-commits each micro-batch through the same Iceberg-style snapshot layer the
-batch path uses, so a crashed stream resumes from the last snapshot plus the
-streaming checkpoint (exactly-once per partition).
+Late data is handled with a watermark on ``warc_ts``.  The sinks are plain
+append-mode parquet writes (no snapshot commit); a restarted stream resumes
+from its streaming checkpoint.
 """
 
 from __future__ import annotations

@@ -52,8 +52,7 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
                    partition_cols: list[str],
                    resume: bool = False,
                    lat_col: str = "lat", lon_col: str = "lon",
-                   repartition: bool = True,
-                   target_file_mb: int | None = None) -> dict:
+                   repartition: bool = True) -> dict:
     """Write df into the table, one snapshot. Returns a summary dict.
 
     The whole write is ONE distributed job (partitionBy write, observed for
@@ -64,15 +63,6 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
     ``repartition=False`` preserves the incoming partitioning/ordering —
     layout.zorder_write pre-arranges rows by (partition, z-value) and a
     hash repartition here would scramble that clustering.
-
-    ``target_file_mb`` sizes output files UP FRONT (the small-files
-    problem is cheaper to prevent than to compact away): the plan-stats
-    estimate (metadata-only, plans/estimate.py) picks the shuffle
-    fan-out so each task writes ~one target-sized file per table
-    partition it holds.  Plan stats over-estimate vs parquet encoding
-    (they reflect in-memory row width), so files land under the target
-    — the bound that matters.  Mutually exclusive with
-    ``repartition=False``.
     """
     if not os.path.exists(os.path.join(table.meta_dir, "table-spec.json")):
         table.init(df.schema.json(), partition_cols)
@@ -100,7 +90,7 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
         work = work.filter(~any_committed)
 
     metrics = _write_partitions(work, table, partition_cols, lat_col,
-                                lon_col, repartition, target_file_mb)
+                                lon_col, repartition)
     return _commit(table, metrics, len(skip_keys))
 
 
@@ -117,25 +107,12 @@ def _commit(table: IcebergishTable, metrics: list[dict], skipped: int,
 
 def _write_partitions(work: DataFrame, table: IcebergishTable,
                       partition_cols: list[str], lat_col: str = "lat",
-                      lon_col: str = "lon", repartition: bool = True,
-                      target_file_mb: int | None = None) -> list[dict]:
+                      lon_col: str = "lon",
+                      repartition: bool = True) -> list[dict]:
     """Dynamic-overwrite ``work``'s partitions under the table's data dir;
     return one manifest per written partition, uncommitted."""
-    if target_file_mb is not None:
-        assert repartition, "target_file_mb needs the repartition path"
-        from geolake_spark.plans.estimate import estimate_df_bytes
-        est = estimate_df_bytes(work)
-        n_files = max(1, min(int(est // (target_file_mb * 1024 * 1024)) + 1,
-                             100_000))
-        # salt beyond the partition key so one table partition can span
-        # several tasks/files instead of one giant file per partition
-        laid_out = work.repartition(
-            n_files, *[F.col(c) for c in partition_cols],
-            F.spark_partition_id())
-    elif repartition:
-        laid_out = work.repartition(*[F.col(c) for c in partition_cols])
-    else:
-        laid_out = work
+    laid_out = (work.repartition(*[F.col(c) for c in partition_cols])
+                if repartition else work)
     # observe the frame that is written (not an input below a shuffle, which
     # the optimizer may prune away on empty input and leave no metrics)
     written = Observation()

@@ -90,7 +90,7 @@ def main() -> None:
            .withColumn("bucket", F.pmod(F.xxhash64("url"), args.buckets)))
     table = IcebergishTable(args.table)
     summary = write_snapshot(out, table, ["bucket"], resume=args.resume)
-    kept = spark.read.parquet(table.data_dir).count()
+    kept = table.read(spark).count()
     print({**funnel, "rows_committed": kept, **summary})
     spark.stop()
 

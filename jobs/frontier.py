@@ -90,7 +90,7 @@ def main() -> None:
                           F.pmod(F.xxhash64("host"), args.buckets))
     table = IcebergishTable(args.table)
     summary = write_snapshot(out, table, ["bucket"], resume=args.resume)
-    committed = spark.read.parquet(table.data_dir)
+    committed = table.read(spark)
     funnel["scheduled"] = committed.count()
     funnel["hosts"] = committed.select("host").distinct().count()
     print({**funnel, **summary})

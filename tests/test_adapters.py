@@ -157,31 +157,9 @@ def test_catalog_pattern_product_prunes_at_scan(spark, tmp_path):
     assert cat.execute("clim", "spread", {}).count() == 6
 
 
-def test_paginated_lister_matches_flat_listing(spark, tmp_path):
-    """The paginated protocol (lexicographic pages + continuation token)
-    must enumerate exactly the flat sorted listing — including files that
-    straddle a page boundary — so attr pruning is identical through either
-    lister (round-5: the object-store scale path)."""
-    d = _write_patterned_drop(tmp_path)
-    flat = sorted(f.name for f in d.iterdir())
-    for page_size in (1, 2, 3, 100):
-        paged = list(adapters.paginated_lister(page_size=page_size)(str(d)))
-        assert paged == flat
-    df_flat = adapters.read_patterned(
-        spark, str(d), "{var}_ens_spread_{res}deg.parquet",
-        attr_filters={"var": "tmax"})
-    df_paged = adapters.read_patterned(
-        spark, str(d), "{var}_ens_spread_{res}deg.parquet",
-        attr_filters={"var": "tmax"},
-        list_files=adapters.paginated_lister(page_size=2))
-    assert (sorted(r["value"] for r in df_paged.collect())
-            == sorted(r["value"] for r in df_flat.collect()))
-
-
 def test_default_lister_paginates_large_directories(spark, tmp_path):
-    """Above PAGINATE_THRESHOLD files the default lister drives the
-    paginated protocol; pruning over a 10k-file directory must pick
-    exactly the attr-matching files."""
+    """Pruning over a 10k-file directory must pick exactly the
+    attr-matching files."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     d = tmp_path / "big"
@@ -194,8 +172,6 @@ def test_default_lister_paginates_large_directories(spark, tmp_path):
                    d / "keep_ens_spread_1deg.parquet")
     for i in range(10_000):
         (d / f"skip{i:05d}_ens_spread_1deg.parquet").touch()
-    names = adapters.default_lister(str(d))
-    assert not isinstance(names, list)  # generator -> paginated path
     df = adapters.read_patterned(spark, str(d),
                                  "{var}_ens_spread_{res}deg.parquet",
                                  attr_filters={"var": "keep"})

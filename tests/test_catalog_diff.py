@@ -85,21 +85,13 @@ def test_expire_snapshots(spark, tmp_path):
         assert os.path.exists(os.path.join(t.meta_dir, m))
 
 
-def test_target_file_mb_splits_large_partitions(spark, tmp_path):
-    import glob, os
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path):
+    import pytest
     t = IcebergishTable(str(tmp_path / "t"))
-    # ~3 MB of rows in ONE partition value; 1 MB target -> several files
-    df = (spark.range(0, 300_000)
-          .selectExpr("id", "cast(0 as bigint) as shard",
-                      "0.0 as lat", "0.0 as lon",
-                      "repeat('x', 64) as pad"))
-    info = write_snapshot(df, t, ["shard"], target_file_mb=1)
-    assert info["rows"] == 300_000
-    files = glob.glob(os.path.join(t.data_dir, "shard=0", "*.parquet"))
-    assert len(files) > 1
-    # the target is an upper bound on file size (plan stats overestimate)
-    assert all(os.path.getsize(f) <= 1.5 * 1024 * 1024 for f in files)
-    assert t.read(spark).count() == 300_000
+    write_snapshot(_df(spark, [0]), t, ["shard"])
+    with pytest.raises(ValueError, match="got 0"):
+        t.expire_snapshots(keep_last=0)
+    assert [h["snapshot_id"] for h in t.history()] == [1]
 
 
 def test_read_changes_incremental_scan(spark, tmp_path):

@@ -25,6 +25,19 @@ def test_area_location_mutually_exclusive():
         })
 
 
+def test_location_lists_must_pair_up():
+    with pytest.raises(GeoQueryError, match="2 latitudes and 3 longitudes"):
+        GeoQuery.parse({"location": {"latitude": [1, 2],
+                                     "longitude": [1, 2, 3]}})
+    with pytest.raises(GeoQueryError, match="1 latitudes and 2 longitudes"):
+        GeoQuery.parse({"location": {"latitude": 1, "longitude": [1, 2]}})
+    with pytest.raises(GeoQueryError, match="no probes"):
+        GeoQuery.parse({"location": {"latitude": [], "longitude": []}})
+    q = GeoQuery.parse({"location": {"latitude": [1, 2],
+                                     "longitude": [3, 4]}})
+    assert q.location["longitude"] == [3, 4]
+
+
 def test_extras_fold_into_filters():
     # geoquery.py:31-38 / test_geoquery.py:34-54
     q = GeoQuery.parse({"variable": "tas", "resolution": "0.1", "version": "v1"})

@@ -113,7 +113,9 @@ def test_request_worker_thread_exits_clean(catalog):
     try:
         rid = catalog.submit_execute("web", "pages", {"filters": {"lang": "en"}})
         assert catalog.requests.wait(rid, timeout_s=120) == RequestStatus.DONE.value
-        catalog.requests._threads[rid].join(timeout=30)
+        for t in threading.enumerate():  # the worker, unless already done
+            if t.name == f"geolake-req-{rid}":
+                t.join(timeout=30)
     finally:
         threading.excepthook = orig
     assert not seen, f"request worker raised: {seen}"

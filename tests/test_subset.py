@@ -102,23 +102,42 @@ def test_full_pipeline_fixed_order(obs, obs_pdf):
     assert out.count() == len(exp) > 0
 
 
-def test_apply_location_windowed_equals_per_probe(obs):
-    """The many-probe windowed 1-NN path (round 3) selects exactly the
-    same grid points as the per-probe limit-1 path."""
-    import numpy as np
+def test_apply_location_matches_brute_force(obs, obs_pdf):
+    """One plan for any probe count picks, per probe, the grid point NumPy
+    picks: smallest distance, ties to the smaller lat, then the smaller
+    lon.  Checked on 150 random probes, on probes midway between grid
+    points, and on two probes at one point (its rows come back once), over
+    a frame whose null-coordinate rows are never chosen."""
+    from geolake_spark.cells import haversine_km
+    null = F.lit(None).cast("double")
+    frame = (obs.unionByName(obs.limit(1).withColumn("lat", null))
+             .unionByName(obs.limit(1).withColumn("lon", null)))
+    grid = obs_pdf[["lat", "lon"]].drop_duplicates().to_numpy()
+
+    def check(lats, lons):
+        want = set()
+        for plat, plon in zip(lats, lons):
+            d = haversine_km(grid[:, 0], grid[:, 1], plat, plon)
+            i = np.lexsort((grid[:, 1], grid[:, 0], d))[0]
+            want.add((grid[i, 0], grid[i, 1]))
+        out = subset.apply_location(frame, {"latitude": lats,
+                                            "longitude": lons})
+        assert out.columns == frame.columns
+        rows = [tuple(r) for r in out.select("lat", "lon").collect()]
+        assert set(rows) == want
+        at = pd.Series(list(zip(obs_pdf.lat, obs_pdf.lon))).isin(want)
+        assert len(rows) == int(at.sum())
+        return want
+
     rng = np.random.RandomState(11)
-    lats = list(np.round(rng.uniform(9.5, 11.5, 150), 4))
-    lons = list(np.round(rng.uniform(23.5, 26.5, 150), 4))
-    loc = {"latitude": lats, "longitude": lons}
-    per_probe = subset.apply_location(obs, loc, windowed=False)
-    windowed = subset.apply_location(obs, loc, windowed=True)
-    key = ["lat", "lon"]
-    a = {tuple(r) for r in per_probe.select(*key).distinct().collect()}
-    b = {tuple(r) for r in windowed.select(*key).distinct().collect()}
-    assert a == b and len(a) > 0
-    assert per_probe.count() == windowed.count()
-    # auto-switch kicks in above the threshold (no per-probe plan union)
-    assert subset.MANY_LOCATION_PROBES < 150
+    check(list(np.round(rng.uniform(9.5, 11.5, 150), 4)),
+          list(np.round(rng.uniform(23.5, 26.5, 150), 4)))
+    # midway on a meridian, on a parallel, and amid four points (the
+    # poleward pair is nearer on the sphere, and tied)
+    assert check([10.25], [25.0]) == {(10.0, 25.0)}
+    assert check([11.0], [25.25]) == {(11.0, 25.0)}
+    assert check([10.25], [25.25]) == {(10.5, 25.0)}
+    assert check([10.9, 10.9], [25.4, 25.4]) == {(11.0, 25.5)}
 
 
 def test_apply_time_rejects_non_temporal_axis(spark):
