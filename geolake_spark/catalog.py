@@ -11,17 +11,21 @@ emulated with the same contract Iceberg gives a job:
         manifest-<id>-<part>.json # per-partition lineage: files, row counts,
                                   # cell histogram, min/max stats
       data/
-        <partition_path>/part-*.parquet
+        <col>=<value>/part-*.parquet  # fresh files only, named by Spark
 
 Commit protocol (one routine, ``IcebergishTable.commit``):
-  1. write data files under data/<partition>/ (task output)
-  2. write manifest JSONs for the added partitions
+  1. write fresh data files (``write._write_partitions``)
+  2. write manifest JSONs for the added partitions, each listing its files
   3. create snap-N.json EXCLUSIVELY, listing every live manifest minus the
      replaced and removed partitions plus the added ones — so adds and
      removes land in ONE snapshot, and a writer that loses the race for N
-     gets CommitConflictError instead of overwriting the winner
+     gets CommitConflictError (its manifests and files deleted) instead
+     of overwriting the winner
   4. atomically rename a temp version-hint over version-hint.txt
-  5. delete the data directories of removed partitions
+  5. delete the replaced and removed manifests' files that the new
+     snapshot does not list
+Readers read exactly the files the snapshot's manifests list, so a write
+that has not committed is never read.
 
 Resume = anti-join of planned partition values against partitions already in
 the current snapshot (SURVEY.md §2.3 J6; BASELINE.json "resumable from
@@ -35,7 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -121,41 +124,36 @@ class IcebergishTable:
                           target_files: int = 1) -> dict:
         """Rewrite one partition's files into ``target_files`` larger
         ones and commit a new snapshot — the small-files maintenance op
-        (Iceberg ``rewrite_data_files`` analogue).  Row content is
-        unchanged: the rewrite is verified by count BEFORE the
-        destructive swap, and the manifest keeps its lineage metrics
-        (row_count, cell_histogram) with only byte_size refreshed."""
-        path = self.partition_path(partition)
-        before = [m for m in self.manifests() if m["partition"] == partition]
-        if not before:
+        (Iceberg ``rewrite_data_files`` analogue).  The rewrite goes
+        through the one writer (fresh files) and is verified by row
+        count before the commit; the manifest keeps its lineage metrics
+        (row_count, cell_histogram, column_stats) with only ``files`` and
+        ``byte_size`` swapped, and the commit deletes the old files."""
+        from geolake_spark.write import _write_partitions
+        _, man = self._live(self.snapshot()).get(_key(partition), (0, None))
+        if man is None:
             raise ValueError(f"unknown partition: {partition}")
-        man = dict(before[0])
-        df = spark.read.parquet(path)
-        n_before = df.count()
-        tmp = path + f".compact-{uuid.uuid4().hex[:8]}"
-        df.coalesce(target_files).write.parquet(tmp)
-        if spark.read.parquet(tmp).count() != n_before:
-            shutil.rmtree(tmp)
-            raise RuntimeError("compaction row-count mismatch; aborted "
-                               "before swap")
-        old = path + f".pre-compact-{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        man["byte_size"] = sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path) if not f.startswith("."))
-        snap_id = self.commit([man])
-        files = len([f for f in os.listdir(path)
-                     if f.endswith(".parquet")])
-        return {"snapshot_id": snap_id, "rows": n_before, "files": files}
+        new = _write_partitions(
+            self._scan(spark, [man]).coalesce(target_files), self,
+            self.table_spec()["partition_cols"], repartition=False)
+        rows = sum(m["row_count"] for m in new)
+        if rows != man["row_count"]:
+            self._delete_files(new)
+            raise RuntimeError(
+                f"{self.root}: compaction of {partition} rewrote {rows} rows "
+                f"of {man['row_count']}; aborted before the commit")
+        snap_id = self.commit([{**man, "files": new[0]["files"],
+                                "byte_size": new[0]["byte_size"]}])
+        return {"snapshot_id": snap_id, "rows": rows,
+                "files": len(new[0]["files"])}
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Metadata garbage collection: drop snapshot JSONs older than
         the newest ``keep_last`` plus any manifest no retained snapshot
-        references.  Data files are never touched here (partition
-        overwrite already replaces them in place).  ``history()``/
-        ``diff()`` remain valid for retained snapshots only."""
+        references.  Data files are never touched here: ``commit``
+        deletes the files its snapshot stops listing, so older snapshots
+        keep metadata only.  ``history()``/``diff()`` remain valid for
+        retained snapshots only."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be at least 1, got {keep_last}")
         hist = self.history()
@@ -183,13 +181,12 @@ class IcebergishTable:
         (manifest identity), no data scan.  ``from_snap=None`` diffs
         against the empty table.  A partition counts as *rewritten*
         when both snapshots carry it but under different manifests
-        (dynamic partition overwrite committed new files for it).
+        (a write committed new files for it).
 
-        Note on time travel: partition overwrites REPLACE data files in
-        place (unlike Iceberg's immutable file sets), so old snapshots
-        retain lineage/metrics but not readable old data — diff and
-        history are the supported archaeology, read-at-snapshot is
-        deliberately not offered."""
+        Note on time travel: ``commit`` deletes the files its snapshot
+        stops listing, so old snapshots retain lineage/metrics but not
+        readable old data — diff and history are the supported
+        archaeology, read-at-snapshot is not offered."""
         a = self._live(self.snapshot(from_snap)
                        if from_snap is not None else None)
         b = self._live(self.snapshot(to_snap))
@@ -220,17 +217,15 @@ class IcebergishTable:
         with open(os.path.join(self.meta_dir, "table-spec.json")) as f:
             return json.load(f)
 
-    def partition_path(self, partition: dict) -> str:
-        parts = [f"{k}={v}" for k, v in partition.items()]
-        return os.path.join(self.data_dir, *parts)
-
     def commit(self, add: list[dict], remove: Sequence[dict] = ()) -> int:
         """The one snapshot writer: a new snapshot whose manifest list is
         the current one with ``add``'s partitions replaced or appended and
-        ``remove``'s partitions dropped, then the hint swap, then removal
-        of the dropped partitions' data directories.  Raises
-        CommitConflictError, leaving the winner untouched, when another
-        writer has already committed the same snapshot id."""
+        ``remove``'s partitions dropped, then the hint swap, then deletion
+        of the replaced and dropped manifests' ``files`` (paths relative
+        to ``data_dir``) that ``add`` does not list.  Raises
+        CommitConflictError, leaving the winner untouched and deleting
+        ``add``'s manifests and files, when another writer has already
+        committed the same snapshot id."""
         prev = self.snapshot()
         snap_id = (prev["snapshot_id"] + 1) if prev else 1
         live = self._live(prev)
@@ -261,6 +256,7 @@ class IcebergishTable:
         except FileExistsError:
             for name in names:
                 os.remove(os.path.join(self.meta_dir, name))
+            self._delete_files(add)
             raise CommitConflictError(
                 f"{self.root}: snapshot {snap_id} was committed by another "
                 "writer") from None
@@ -268,9 +264,13 @@ class IcebergishTable:
         with open(tmp, "w") as f:
             f.write(str(snap_id))
         os.replace(tmp, self._hint_path())  # the atomic swap
-        for p in dropped:
-            shutil.rmtree(self.partition_path(p), ignore_errors=True)
+        self._delete_files([m for k, (_, m) in live.items() if k in gone],
+                           keep={f for m in add for f in m["files"]})
         return snap_id
+
+    def _delete_files(self, manifests: list[dict], keep=frozenset()) -> None:
+        for f in {f for m in manifests for f in m["files"]} - keep:
+            os.remove(os.path.join(self.data_dir, f))
 
     # -- read path -----------------------------------------------------------
 
@@ -280,21 +280,22 @@ class IcebergishTable:
         partitions are handed to the reader — partition pruning happens at
         the metadata level, mirroring geolake's attribute filters
         (datastore.py:420-423)."""
-        parts = self.committed_partitions()
+        ms = self.manifests()
         if partition_filter is not None:
-            parts = [p for p in parts if partition_filter(p)]
-        if not parts:
+            ms = [m for m in ms if partition_filter(m["partition"])]
+        if not ms:
             raise ValueError(f"{self.root}: no live partitions (empty table "
                              "or all pruned)")
-        return self._scan(spark, parts)
+        return self._scan(spark, ms)
 
-    def _scan(self, spark: SparkSession, partitions: list[dict]) -> DataFrame:
-        """The one reader over table data: exactly these partitions'
-        directories, typed by the table-spec schema (no footer inference).
-        No partitions -> an empty frame with that schema."""
+    def _scan(self, spark: SparkSession, manifests: list[dict]) -> DataFrame:
+        """The one reader over table data: exactly the files these
+        manifests list, typed by the table-spec schema (no footer
+        inference).  No manifests -> an empty frame with that schema."""
         schema = StructType.fromJson(self.table_spec()["schema"])
         return (spark.read.schema(schema).option("basePath", self.data_dir)
-                .parquet(*[self.partition_path(p) for p in partitions]))
+                .parquet(*[os.path.join(self.data_dir, f)
+                           for m in manifests for f in m["files"]]))
 
     def read_changes(self, spark: SparkSession, from_snap: int | None,
                      to_snap: int | None = None) -> DataFrame:
@@ -303,13 +304,16 @@ class IcebergishTable:
         from manifest metadata (:meth:`diff`) — the consumer contract
         that lets a downstream job re-process a 10^12-row table's few
         changed partitions instead of the whole table.  Rewritten
-        partitions are re-read WHOLE and reflect the CURRENT files:
-        partition overwrite replaces data in place, so per-row deltas
-        and read-at-old-snapshot are deliberately not offered (the
+        partitions are re-read WHOLE, from the files ``to_snap`` lists:
+        ``commit`` deletes the files its snapshot stops listing, so
+        per-row deltas and read-at-old-snapshot are not offered (the
         :meth:`diff` time-travel note).  Nothing changed -> an empty
         DataFrame with the table schema."""
-        d = self.diff(from_snap, to_snap)
-        return self._scan(spark, d["added"] + d["rewritten"])
+        a = self._live(self.snapshot(from_snap)
+                       if from_snap is not None else None)
+        b = self._live(self.snapshot(to_snap))
+        return self._scan(spark, [m for k, (name, m) in b.items()
+                                  if k not in a or a[k][0] != name])
 
     def stats_prune(self, col: str, lo=None, hi=None) -> tuple[list, int]:
         """Data skipping on manifest column stats: (kept manifests,
@@ -337,7 +341,7 @@ class IcebergishTable:
         row filter still applies on the survivors, pushed down to the
         parquet scan."""
         kept, _ = self.stats_prune(col, lo, hi)
-        df = self._scan(spark, [m["partition"] for m in kept])
+        df = self._scan(spark, kept)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:

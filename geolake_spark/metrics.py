@@ -26,7 +26,8 @@ def _spark_order(v):
 def partition_metrics(df: DataFrame, partition_cols: list[str],
                       lat_col: str = "lat", lon_col: str = "lon") -> list[dict]:
     """One dict per partition: {partition, row_count, cell_histogram,
-    column_stats}.
+    column_stats, files}.  ``df`` is a file scan: ``files`` is the set of
+    ``_metadata.file_path`` URIs of the files holding the partition's rows.
 
     cell_histogram: res-5 grid-cell -> row count (the coarse spatial
     fingerprint recorded in every manifest).  column_stats: per numeric
@@ -37,9 +38,9 @@ def partition_metrics(df: DataFrame, partition_cols: list[str],
     this with truncate+increment; numeric + epoch-micro predicates carry
     the pruning value here).
 
-    Both come from ONE (partition, cell) group-by; the driver reduces its
+    All come from ONE (partition, cell) group-by; the driver reduces its
     rows per partition: counts and null counts add, min of mins, max of
-    maxes (in Spark's order, where NaN is the largest double).
+    maxes (in Spark's order, where NaN is the largest double), files unite.
     """
     num = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
            T.FloatType, T.DoubleType)
@@ -49,7 +50,8 @@ def partition_metrics(df: DataFrame, partition_cols: list[str],
     has_geo = lat_col in df.columns and lon_col in df.columns
     cell = (grid_cell_col(F.col(lat_col), F.col(lon_col), HISTOGRAM_RES)
             if has_geo else F.lit(-1))
-    aggs = [F.count("*").alias("cnt")]
+    aggs = [F.count("*").alias("cnt"),
+            F.collect_set("_metadata.file_path").alias("files")]
     for c in stat_cols:
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}"),
                  F.sum(F.col(c).isNull().cast("long")).alias(f"nl_{c}")]
@@ -63,8 +65,10 @@ def partition_metrics(df: DataFrame, partition_cols: list[str],
             "partition": {c: r[c] for c in partition_cols},
             "row_count": 0, "cell_histogram": {},
             "column_stats": {c: {"min": None, "max": None, "nulls": 0}
-                             for c in stat_cols}})
+                             for c in stat_cols},
+            "files": set()})
         entry["row_count"] += r["cnt"]
+        entry["files"].update(r["files"])
         entry["cell_histogram"][str(r["_hcell"])] = r["cnt"]
         for c in stat_cols:
             st = entry["column_stats"][c]

@@ -30,9 +30,11 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from geolake_spark import cells
 from geolake_spark.functions.geo import grid_cell_col, haversine_col
 
@@ -170,7 +172,6 @@ def _cover_df(spark: SparkSession, cover_pdf: pd.DataFrame,
     import os
     import tempfile
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
     key = (id(spark._jsparkSession),
            hashlib.md5(json.dumps([(p["polygon_id"], p["rings"])
@@ -320,6 +321,15 @@ def _box_sizes(probes: list, k: int, res: int,
     return out
 
 
+def _local_frame(spark: SparkSession, rows: list, schema: T.StructType
+                 ) -> DataFrame:
+    """``rows`` as a local relation: an Arrow table, not a Python RDD (which
+    a list would give, starting Python workers), also when empty."""
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema)))
+
+
 def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
                    res: int = DEFAULT_KNN_RES,
                    lat_col: str = "lat", lon_col: str = "lon",
@@ -405,7 +415,7 @@ def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
                               1e-6)
             boxes.append((qid, float(la), float(lo),
                           min(half, 180.0), min(dlon, 180.0)))
-        box = spark.createDataFrame(boxes, box_schema)
+        box = _local_frame(spark, boxes, box_schema)
         bounds = dict(box.select("query_id", bound).collect())
         cand = F.broadcast(box.withColumn("_band", F.explode(
             F.sequence(band(lat_s), band(lat_n)))))
@@ -428,7 +438,7 @@ def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
                 radius[qid] *= 2
                 unresolved.append((qid, la, lo))
         todo = unresolved
-    return spark.createDataFrame(out, out_schema)
+    return _local_frame(spark, out, out_schema)
 
 
 # ---------------------------------------------------------------------------

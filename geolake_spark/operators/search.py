@@ -648,25 +648,21 @@ QUALIFY rank <= {k}"""
 # Query-time cost is index-shaped, not corpus-shaped: no tokenization,
 # no df window — tf and df_count were paid once at build time.  With the
 # term-hash bucket layout the reader prunes whole partitions before the
-# scan (read_index_for_terms), so a query touches |query-term buckets|
-# directories of a 10^12-doc index, never the rest.
+# scan (read_index_for_terms), so a query reads the files of its
+# |query-term buckets| in a 10^12-doc index, never the rest.
 # ---------------------------------------------------------------------------
 
 
-def read_index_for_terms(spark, data_dir: str, terms: list[str],
-                         n_buckets: int):
-    """Bucket-pruned read of a committed postings table: compute
-    ``pmod(xxhash64(term), n_buckets)`` for the query terms with one
-    metadata-sized Spark job, then read with a partition filter on
-    ``bucket`` — Hive-style layout makes this directory pruning (the
-    scan never lists, opens, or row-skips the other buckets)."""
+def read_index_for_terms(spark, table, terms: list[str], n_buckets: int):
+    """Bucket-pruned read of a committed postings ``table`` partitioned by
+    ``bucket``: compute ``pmod(xxhash64(term), n_buckets)`` of the query
+    terms as literals, then read only those buckets' manifests' files.
+    ``table.read`` raises ``ValueError`` when none of them is committed."""
     qs = sorted({t.strip().lower() for t in terms if t.strip()})
-    rows = (spark.createDataFrame([(t,) for t in qs], "term string")
-            .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-                    .alias("b")).distinct().collect())
-    buckets = sorted(r.b for r in rows)   # driver-sized: <= |terms| ints
-    return (spark.read.parquet(data_dir)
-            .filter(F.col("bucket").isin(buckets)))
+    buckets = set(spark.range(1).select(*[
+        F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets)) for t in qs])
+        .first()) if qs else set()
+    return table.read(spark, partition_filter=lambda p: p["bucket"] in buckets)
 
 
 def index_topk(index: DataFrame, terms: list[str], n_docs: int,

@@ -12,21 +12,17 @@ checkpoints"; reference analogue: request state machine
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from geolake_spark.catalog import IcebergishTable
 from geolake_spark.metrics import partition_metrics
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            total += os.path.getsize(os.path.join(root, fn))
-    return total
 
 
 def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str],
@@ -55,8 +51,8 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
                    repartition: bool = True) -> dict:
     """Write df into the table, one snapshot. Returns a summary dict.
 
-    The whole write is ONE distributed job (partitionBy write, observed for
-    the partition values it wrote) plus ONE metrics aggregation —
+    The whole write is ONE distributed job (partitionBy write of fresh
+    files) plus ONE metrics aggregation over the written files —
     planned/committed partition reconciliation happens on partition
     *values* (metadata), never on data rows.
 
@@ -109,31 +105,33 @@ def _write_partitions(work: DataFrame, table: IcebergishTable,
                       partition_cols: list[str], lat_col: str = "lat",
                       lon_col: str = "lon",
                       repartition: bool = True) -> list[dict]:
-    """Dynamic-overwrite ``work``'s partitions under the table's data dir;
-    return one manifest per written partition, uncommitted."""
+    """Write ``work`` as fresh files under the table's data dir; return one
+    manifest per written partition, uncommitted, listing its ``files``.
+    Spark writes and names them in a hidden staging dir; they then move to
+    the same relative path under ``data_dir``."""
     laid_out = (work.repartition(*[F.col(c) for c in partition_cols])
                 if repartition else work)
-    # observe the frame that is written (not an input below a shuffle, which
-    # the optimizer may prune away on empty input and leave no metrics)
-    written = Observation()
-    (laid_out
-     .observe(written, F.collect_set(F.struct(*partition_cols)).alias("p"))
-     .write.mode("overwrite")
-     .partitionBy(*partition_cols)
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(table.data_dir))
-    planned = [r.asDict() for r in written.get["p"]]
-    if not planned:
-        return []
-
-    # lineage metrics from the files just written (column-pruned scan of the
-    # new partitions only): avoids re-running the whole upstream pipeline a
-    # second time (pandas-UDF enrichment is expensive) and doubles as a
-    # read-back validation of the write.
-    back = table._scan(work.sparkSession, planned)
-    metrics = partition_metrics(back, partition_cols, lat_col, lon_col)
-    for m in metrics:
-        m["byte_size"] = _dir_bytes(table.partition_path(m["partition"]))
+    # hidden parent: listings of data/ skip it (a hidden root makes Spark warn)
+    stage = os.path.join(table.data_dir, ".stage", uuid.uuid4().hex)
+    try:
+        laid_out.write.partitionBy(*partition_cols).parquet(stage)
+        # metrics and file lists from the files just written: avoids
+        # re-running the whole upstream pipeline (pandas-UDF enrichment is
+        # expensive) and doubles as a read-back validation of the write.
+        schema = StructType.fromJson(table.table_spec()["schema"])
+        back = work.sparkSession.read.schema(schema).parquet(stage)
+        metrics = partition_metrics(back, partition_cols, lat_col, lon_col)
+        for m in metrics:
+            files = sorted(os.path.relpath(unquote(urlparse(u).path), stage)
+                           for u in m["files"])
+            for f in files:
+                os.renames(os.path.join(stage, f),
+                           os.path.join(table.data_dir, f))
+            m["files"] = files
+            m["byte_size"] = sum(os.path.getsize(
+                os.path.join(table.data_dir, f)) for f in files)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return metrics
 
 
@@ -159,7 +157,8 @@ def merge_snapshot(updates: DataFrame, table: IcebergishTable,
     a 100k-partition table scans 10 partitions; the anti-join runs over
     that slice only, with the updates side broadcastable when small.
     This is exactly the copy-on-write granularity trade Iceberg v1 makes
-    (file-level there, partition-level here — our manifest unit).
+    (file-level there, partition-level here — our manifest unit).  Fresh
+    files leave the lazily read current slice intact until the commit.
 
     Contract: a key's partition values must not change across merges
     (standard CoW-merge constraint — a moved key must be deleted from
@@ -193,13 +192,6 @@ def merge_snapshot(updates: DataFrame, table: IcebergishTable,
             keys = keys.unionByName(deletes.select(*key_cols))
         survivors = current.join(keys.distinct(), key_cols, "left_anti")
         merged = survivors.unionByName(updates.select(*current.columns))
-        # materialization barrier: the dynamic overwrite below replaces the
-        # very files `merged` lazily reads — without a barrier Spark deletes
-        # its own input mid-job (FAILED_READ_FILE).  Iceberg's CoW avoids
-        # this by writing fresh files and swapping manifests; our in-place
-        # partition overwrite needs the affected slice pinned first (slice-
-        # sized, not table-sized — bounded by the partitions being merged).
-        merged = merged.localCheckpoint(eager=True)
     n_deleted = 0
     if deletes is not None:
         n_deleted = (table.read(spark, partition_filter=lambda p:
@@ -209,7 +201,7 @@ def merge_snapshot(updates: DataFrame, table: IcebergishTable,
 
     metrics = _write_partitions(merged, table, part_cols)
     # a partition whose rows were ALL deleted has nothing in `merged`, so
-    # dynamic overwrite never touches it — the same commit drops it
+    # no manifest replaces it — the same commit drops it
     written = {tuple(m["partition"][c] for c in part_cols) for m in metrics}
     emptied = [dict(zip(part_cols, k)) for k in sorted(hit - written)]
     out = _commit(table, metrics, 0, emptied)

@@ -6,24 +6,22 @@
         [--keep-snapshots 2] [--dry-run]
 
 The nightly OPTIMIZE every write-heavy table needs: every live
-partition holding more than ``--min-files`` data files is rewritten to
-``--target-files`` larger ones (catalog.compact_partition — count-
-verified before the destructive swap, lineage metrics preserved, one
-snapshot per compacted partition), then snapshot metadata older than
-the newest ``--keep-snapshots`` is garbage-collected
-(catalog.expire_snapshots).  ``--dry-run`` reports the plan without
-touching anything.
+partition whose manifest lists more than ``--min-files`` data files is
+rewritten to ``--target-files`` larger ones (catalog.compact_partition —
+fresh files, count-verified before the commit, lineage metrics
+preserved, one snapshot per compacted partition, the old files deleted
+by that commit), then snapshot metadata older than the newest
+``--keep-snapshots`` is garbage-collected (catalog.expire_snapshots).
+``--dry-run`` reports the plan without touching anything.
 
-Scale shape: the partition scan list comes from manifests (metadata),
-each compaction is one partition-sized Spark job, and GC is pure
-driver-side metadata — the table's other partitions are never read.
+Scale shape: the plan comes from manifests (metadata, no listing), each
+compaction is one partition-sized Spark job, and GC is pure driver-side
+metadata — the table's other partitions are never read.
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
-import os
 
 
 def main() -> None:
@@ -42,14 +40,10 @@ def main() -> None:
     from geolake_spark.session import get_spark
 
     table = IcebergishTable(args.table)
-    plan = []
-    for m in table.manifests():
-        part = m["partition"]
-        n = len(glob.glob(os.path.join(table.partition_path(part),
-                                       "*.parquet")))
-        if n > args.min_files:
-            plan.append((part, n))
-    summary = {"partitions_scanned": len(table.manifests()),
+    ms = table.manifests()
+    plan = [(m["partition"], len(m["files"])) for m in ms
+            if len(m["files"]) > args.min_files]
+    summary = {"partitions_scanned": len(ms),
                "to_compact": len(plan), "compacted": 0, "rows": 0,
                "expired_snapshots": 0, "dry_run": args.dry_run}
     if args.dry_run:

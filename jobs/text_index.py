@@ -65,7 +65,7 @@ def main() -> None:
         "bucket", F.pmod(F.xxhash64("term"), args.buckets))
     table = IcebergishTable(args.table)
     summary = write_snapshot(out, table, ["bucket"], resume=args.resume)
-    stats = spark.read.parquet(table.data_dir).agg(
+    stats = table.read(spark).agg(
         F.count(F.lit(1)).alias("postings"),
         F.countDistinct("term").alias("terms")).collect()[0]
     print({"postings": stats.postings, "terms": stats.terms, **summary})

@@ -51,10 +51,10 @@ def main() -> None:
         "bucket", F.pmod(F.xxhash64("src"), args.buckets))
     table = IcebergishTable(args.table)
     summary = write_snapshot(edges, table, ["bucket"], resume=args.resume)
-    out = {"edges": spark.read.parquet(table.data_dir).count(), **summary}
+    out = {"edges": table.read(spark).count(), **summary}
 
     if args.pagerank_out:
-        committed = spark.read.parquet(table.data_dir)
+        committed = table.read(spark)
         ranks = graph.pagerank(committed.select("src", "dst"),
                                n_iter=args.pagerank_iters)
         ranks.write.mode("overwrite").parquet(args.pagerank_out)

@@ -1,10 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to (not whatever copy is installed)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from geolake_spark.session import get_spark  # noqa: E402
 from geolake_spark.sources import synth  # noqa: E402
@@ -19,7 +22,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def synth_paths():
-    return synth.ensure_local_tables("/root/repo/data", "0.001")
+    return synth.ensure_local_tables(os.path.join(ROOT, "data"), "0.001")
 
 
 @pytest.fixture(scope="session")

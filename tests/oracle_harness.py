@@ -40,7 +40,8 @@ def table_hash(rows, colnames):
 
 
 def run(sf_dir: str, only: list[str] | None = None):
-    sys.path.insert(0, "/root/repo")
+    from conftest import ROOT
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
     from geolake_spark.session import get_spark
 

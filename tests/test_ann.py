@@ -1,11 +1,15 @@
 """ANN: exact brute-force correctness + IVF recall."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from geolake_spark.operators import ann
+
+from conftest import ROOT
 
 
 @pytest.fixture(scope="module")
@@ -117,7 +121,7 @@ def test_ivf_sf1_scale(spark):
     exercising the code path of the full-sf1 (500k, 707-list) build."""
     from geolake_spark.sources import synth
     emb = spark.read.parquet(
-        synth.ensure_embeddings("/root/repo/data", 200_000))
+        synth.ensure_embeddings(os.path.join(ROOT, "data"), 200_000))
     probes = (emb.filter(F.col("vec_id") % 6250 == 7)
               .selectExpr("vec_id as probe_id", "embedding as probe_vec")
               .limit(32))

@@ -1,5 +1,6 @@
 """Bucketed co-located joins: no Exchange in the joined plan."""
 
+import os
 import shutil
 
 import pytest
@@ -7,11 +8,14 @@ from pyspark.sql import functions as F
 
 from geolake_spark.write import write_bucketed
 
+from conftest import ROOT
+
 
 def _cleanup(spark):
     for t in ("b_left", "b_right"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree("/root/repo/spark-warehouse", ignore_errors=True)
+    shutil.rmtree(os.path.join(ROOT, "spark-warehouse"),
+                  ignore_errors=True)
 
 
 def test_bucketed_join_has_no_shuffle(spark, pages):

@@ -11,6 +11,8 @@ from geolake_spark.catalog import IcebergishTable
 from geolake_spark.plans import estimate
 from geolake_spark.write import write_snapshot
 
+from conftest import ROOT
+
 
 @pytest.fixture()
 def table(tmp_path):
@@ -115,6 +117,8 @@ def test_merge_snapshot_new_partition_and_delete(spark, table):
     dels = spark.createDataFrame(
         [(f"u{i}-de", "de") for i in range(20)], ["url", "lang"])
     pre_snap = table.current_snapshot_id()
+    de_files = [os.path.join(table.data_dir, f) for m in table.manifests()
+                if m["partition"]["lang"] == "de" for f in m["files"]]
     info = merge_snapshot(ups, table, key_cols=["url"], deletes=dels)
     assert info["deleted_rows"] == 20
     assert info["dropped_partitions"] == 1
@@ -124,8 +128,8 @@ def test_merge_snapshot_new_partition_and_delete(spark, table):
     assert back.filter(F.col("lang") == "de").count() == 0
     assert back.filter(F.col("lang") == "it").count() == 1
     assert back.count() == 21
-    # partition dir physically gone, manifests consistent
-    assert not os.path.exists(table.partition_path({"lang": "de"}))
+    # de's files physically gone, manifests consistent
+    assert de_files and not any(map(os.path.exists, de_files))
     assert {m["partition"]["lang"] for m in table.manifests()} == {"en", "it"}
 
 
@@ -148,9 +152,11 @@ def test_commit_conflict_leaves_winner(table, monkeypatch):
     winner's snap-N.json, the hint and the manifest set stay as they were."""
     from geolake_spark.catalog import CommitConflictError
     table.init('{"type": "struct", "fields": []}', ["lang"])
-    table.commit([{"partition": {"lang": "en"}, "row_count": 1}])
+    table.commit([{"partition": {"lang": "en"}, "row_count": 1,
+                   "files": []}])
     stale = table.snapshot()
-    won = table.commit([{"partition": {"lang": "de"}, "row_count": 2}])
+    won = table.commit([{"partition": {"lang": "de"}, "row_count": 2,
+                         "files": []}])
     with open(table._snap_path(won)) as f:
         won_json = f.read()
     metadata = sorted(os.listdir(table.meta_dir))
@@ -158,11 +164,86 @@ def test_commit_conflict_leaves_winner(table, monkeypatch):
     # the loser planned its commit on the snapshot before the winner's
     monkeypatch.setattr(loser, "snapshot", lambda snap_id=None: stale)
     with pytest.raises(CommitConflictError, match=f"snapshot {won}"):
-        loser.commit([{"partition": {"lang": "fr"}, "row_count": 3}])
+        loser.commit([{"partition": {"lang": "fr"}, "row_count": 3,
+                       "files": []}])
     assert table.current_snapshot_id() == won
     with open(table._snap_path(won)) as f:
         assert f.read() == won_json
     assert sorted(os.listdir(table.meta_dir)) == metadata
+
+
+def _data_files(table):
+    return {os.path.relpath(os.path.join(d, f), table.data_dir)
+            for d, _, fs in os.walk(table.data_dir) for f in fs}
+
+
+def test_write_snapshot_loser_leaves_winner(spark, table, monkeypatch):
+    """A real write that loses the commit race raises the named error,
+    and neither its rows nor its files reach the table."""
+    from geolake_spark.catalog import CommitConflictError
+    write_snapshot(_sample(spark, ["en"]), table, ["lang"])
+    stale = table.snapshot()
+    write_snapshot(_sample(spark, ["de"]), table, ["lang"])
+    files = _data_files(table)
+    loser = IcebergishTable(table.root)
+    # the loser planned its commit on the snapshot before the winner's
+    monkeypatch.setattr(loser, "snapshot", lambda snap_id=None: stale)
+    lost = spark.createDataFrame([("loser", "de", 0.0, 0.0)],
+                                 ["url", "lang", "lat", "lon"])
+    with pytest.raises(CommitConflictError, match="snapshot 2"):
+        write_snapshot(lost, loser, ["lang"])
+    assert table.current_snapshot_id() == 2
+    de = table.read(spark, partition_filter=lambda p: p["lang"] == "de")
+    assert sorted(r.url for r in de.collect()) == \
+        sorted(f"u{i}-de" for i in range(20))
+    assert _data_files(table) == files
+
+
+def test_uncommitted_write_is_not_read(spark, table):
+    """Files of a write that has not committed change no read: neither a
+    scan planned before the write nor a fresh read of the snapshot."""
+    from geolake_spark.write import _write_partitions
+    write_snapshot(_sample(spark, ["en"]), table, ["lang"])
+    planned = table.read(spark)
+    _write_partitions(spark.createDataFrame(
+        [("new-en", "en", 0.0, 0.0)], ["url", "lang", "lat", "lon"]),
+        table, ["lang"])
+    committed = sorted(f"u{i}-en" for i in range(20))
+    assert sorted(r.url for r in planned.collect()) == committed
+    assert sorted(r.url for r in table.read(spark).collect()) == committed
+
+
+def test_odd_partition_values_round_trip(spark, table):
+    """Null, boolean and '/'-containing partition values survive a write,
+    a resume, a merge and a compaction."""
+    from geolake_spark.write import merge_snapshot
+    schema = "url string, lang string, flag boolean, lat double, lon double"
+    parts = [(None, True), ("a b/c", False), ("en", None)]
+    rows = {f"u{i}": (*parts[i % 3], float(i), 0.0) for i in range(12)}
+
+    def check():
+        got = {r.url: (r.lang, r.flag, r.lat, r.lon)
+               for r in table.read(spark).collect()}
+        assert got == rows
+
+    def frame(rs):
+        return spark.createDataFrame([(u, *v) for u, v in rs.items()],
+                                     schema)
+    info = write_snapshot(frame(rows), table, ["lang", "flag"])
+    assert info["written_partitions"] == 3
+    check()
+    again = write_snapshot(frame(rows), table, ["lang", "flag"],
+                           resume=True)
+    assert again["written_partitions"] == 0
+    assert again["skipped_partitions"] == 3
+    ups = {"u0": (None, True, 50.0, 5.0), "new": ("a b/c", False, 1.0, 1.0)}
+    merge_snapshot(frame(ups), table, key_cols=["url"])
+    rows.update(ups)
+    check()
+    for p in table.committed_partitions():
+        table.compact_partition(spark, p)
+    check()
+    assert len(table.committed_partitions()) == 3
 
 
 def test_column_stats_data_skipping(spark, table):
@@ -215,7 +296,8 @@ def test_merge_upsert_job(spark, tmp_path, monkeypatch):
     argv = ["merge_upsert.py", "--table", table, "--updates", ups,
             "--deletes", dels, "--key-cols", "url", "--cores", "4"]
     monkeypatch.setattr(sys, "argv", argv)
-    runpy.run_path("/root/repo/jobs/merge_upsert.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/merge_upsert.py"),
+                   run_name="__main__")
 
     t = IcebergishTable(table)
     back = t.read(spark)

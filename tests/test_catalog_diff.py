@@ -1,10 +1,14 @@
 """Snapshot history + metadata-only diff (catalog.IcebergishTable)."""
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
 from geolake_spark.catalog import IcebergishTable
 from geolake_spark.write import write_snapshot
+
+from conftest import ROOT
 
 
 def _df(spark, shards, rows_per=10, start=0):
@@ -141,13 +145,13 @@ def test_maintain_job_compacts_and_gcs(spark, tmp_path, monkeypatch):
     argv = ["maintain.py", "--table", str(tmp_path / "t"),
             "--min-files", "2", "--keep-snapshots", "2", "--cores", "4"]
     monkeypatch.setattr(sys, "argv", argv + ["--dry-run"])
-    runpy.run_path("/root/repo/jobs/maintain.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/maintain.py"), run_name="__main__")
     # dry run touched nothing
     assert len(glob.glob(os.path.join(t.data_dir, "shard=0",
                                       "*.parquet"))) > 2
 
     monkeypatch.setattr(sys, "argv", argv)
-    runpy.run_path("/root/repo/jobs/maintain.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/maintain.py"), run_name="__main__")
     assert len(glob.glob(os.path.join(t.data_dir, "shard=0",
                                       "*.parquet"))) == 1
     total = spark.read.parquet(t.data_dir).count()

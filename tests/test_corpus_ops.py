@@ -5,10 +5,14 @@ against a straight-Python reimplementation of the published rule."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
 from geolake_spark.operators import ann, curation, dedup, search
+
+from conftest import ROOT
 
 
 # ---------------------------------------------------------------------------
@@ -245,7 +249,8 @@ def test_text_index_job(spark, tmp_path, monkeypatch):
     argv = ["text_index.py", "--input", pin, "--table", table,
             "--buckets", "2", "--champions", "1", "--cores", "4"]
     monkeypatch.setattr(sys, "argv", argv)
-    runpy.run_path("/root/repo/jobs/text_index.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/text_index.py"),
+                   run_name="__main__")
     rows = {(r.term, r.doc_id): (r.tf, r.df_count)
             for r in spark.read.parquet(table + "/data").collect()}
     # one posting per term; 'spark' champion is doc 2 (tf 4)
@@ -256,7 +261,8 @@ def test_text_index_job(spark, tmp_path, monkeypatch):
     # 'cluster': tf 2 in doc 4 beats tf 1 in doc 1
     assert rows[("cluster", 4)][0] == 2
     monkeypatch.setattr(sys, "argv", argv + ["--resume"])
-    runpy.run_path("/root/repo/jobs/text_index.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/text_index.py"),
+                   run_name="__main__")
     assert {(r.term, r.doc_id)
             for r in spark.read.parquet(table + "/data").collect()} \
         == set(rows)

@@ -553,8 +553,9 @@ def test_minhash_signatures_table_resume(spark, tmp_path):
     import shutil
     from geolake_spark.catalog import IcebergishTable
     table = IcebergishTable(root)
-    shutil.copytree(table.partition_path(table.committed_partitions()[0]),
-                    table.partition_path({"sig_part": 99}))
+    first = table.manifests()[0]["files"][0]
+    shutil.copytree(os.path.dirname(os.path.join(table.data_dir, first)),
+                    os.path.join(table.data_dir, "sig_part=99"))
     sigs = dedup._signatures_from_table(dedup.minhash_signatures(df), root,
                                         dedup.SIGNATURE_PARTITIONS)
     assert sorted(r.id for r in sigs.select("id").collect()) == \

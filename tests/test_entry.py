@@ -1,10 +1,6 @@
 """Smoke test of the driver contract module."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 
 def test_entry_returns_rows(spark):

@@ -116,6 +116,9 @@ def test_knn_table_matches_brute_force(spark, pages, pages_pdf):
                       geocode_lat_col(F.col("id") + 1000000).alias("lat"),
                       geocode_lon_col(F.col("id") + 1000000).alias("lon")))
     out = joins.knn_join_table(pages, probes, k=4, res=5)
+    # the result is a local relation, not a Python RDD (no Python workers)
+    assert "ExistingRDD" not in \
+        out._jdf.queryExecution().executedPlan().toString()
     got = (out.select("query_id", "url", "rank").toPandas()
            .sort_values(["query_id", "rank"]))
     probes_pd = probes.toPandas()
@@ -175,6 +178,8 @@ def test_knn_table_k_exceeds_points(spark):
     assert empty.columns == ["query_id", "q_lat", "q_lon", "url",
                              "dist_km", "rank"]
     assert empty.count() == 0
+    assert "ExistingRDD" not in \
+        empty._jdf.queryExecution().executedPlan().toString()
 
 
 def test_knn_table_face_bound_exact(spark):

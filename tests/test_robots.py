@@ -4,7 +4,11 @@ match with Allow winning ties, '*'/'$' patterns."""
 
 from __future__ import annotations
 
+import os
+
 from geolake_spark.operators import robots
+
+from conftest import ROOT
 
 ROBOTS = [
     ("a.com",
@@ -146,11 +150,13 @@ def test_crawl_audit_job(spark, tmp_path, monkeypatch):
     argv = ["crawl_audit.py", "--pages", pin, "--robots", rin,
             "--table", table, "--buckets", "2", "--cores", "4"]
     monkeypatch.setattr(sys, "argv", argv)
-    runpy.run_path("/root/repo/jobs/crawl_audit.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/crawl_audit.py"),
+                   run_name="__main__")
     kept = {r.url for r in spark.read.parquet(table + "/data").collect()}
     assert kept == {"https://a.com/keep"}
     monkeypatch.setattr(sys, "argv", argv + ["--resume"])
-    runpy.run_path("/root/repo/jobs/crawl_audit.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/crawl_audit.py"),
+                   run_name="__main__")
     assert {r.url for r in spark.read.parquet(table + "/data").collect()} \
         == {"https://a.com/keep"}
 
@@ -230,7 +236,7 @@ def test_frontier_job(spark, tmp_path, monkeypatch):
             "--robots", rin, "--table", table, "--buckets", "2",
             "--cores", "4"]
     monkeypatch.setattr(sys, "argv", argv)
-    runpy.run_path("/root/repo/jobs/frontier.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/frontier.py"), run_name="__main__")
     got = {r.url: (r.host, r.slot, r.fetch_at_us)
            for r in spark.read.parquet(table + "/data").collect()}
     # /tmp/x robots-dropped, /seen anti-joined away; a.com serialized
@@ -241,6 +247,6 @@ def test_frontier_job(spark, tmp_path, monkeypatch):
         "https://b.com/solo": ("b.com", 0, 0),
     }
     monkeypatch.setattr(sys, "argv", argv + ["--resume"])
-    runpy.run_path("/root/repo/jobs/frontier.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/frontier.py"), run_name="__main__")
     assert {r.url for r in spark.read.parquet(table + "/data").collect()} \
         == set(got)

@@ -331,7 +331,10 @@ def test_index_topk_matches_champion_semantics(spark):
 
 def test_read_index_for_terms_prunes_buckets(spark, tmp_path):
     """The committed term-hash layout must let a query read ONLY its
-    terms' bucket directories (partition pruning, not row filtering)."""
+    terms' bucket files (manifest pruning, not row filtering)."""
+    import os
+    from urllib.parse import urlparse
+
     from pyspark.sql import functions as F
 
     from geolake_spark.catalog import IcebergishTable
@@ -343,16 +346,17 @@ def test_read_index_for_terms_prunes_buckets(spark, tmp_path):
         "bucket", F.pmod(F.xxhash64("term"), F.lit(8)))
     table = IcebergishTable(str(tmp_path / "ix"))
     write_snapshot(idx, table, ["bucket"])
-    pruned = search.read_index_for_terms(spark, table.data_dir,
-                                         ["t3"], n_buckets=8)
-    full = spark.read.parquet(table.data_dir)
+    pruned = search.read_index_for_terms(spark, table, ["t3"], n_buckets=8)
+    full = table.read(spark)
     assert set(pruned.select("term").distinct().toPandas()["term"]) \
         >= {"t3"}
-    # plan-shape proof of directory pruning: the bucket predicate lands
-    # in PartitionFilters (pre-scan), not PushedFilters/post-scan Filter
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and "bucket" in pf[0]
+    # the scan opens only files the query-term bucket's manifest lists
+    (bucket,) = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit("t3")), F.lit(8))).first()
+    listed = {os.path.join(table.data_dir, f) for m in table.manifests()
+              if m["partition"]["bucket"] == bucket for f in m["files"]}
+    scanned = {urlparse(f).path for f in pruned.inputFiles()}
+    assert scanned and scanned <= listed
     # and retrieval over the pruned read equals retrieval over the full
     a = search.index_topk(pruned, ["t3"], n_docs=200, k=50).collect()
     b = search.index_topk(full, ["t3"], n_docs=200, k=50).collect()

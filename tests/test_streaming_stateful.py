@@ -1,9 +1,13 @@
 """Custom stateful streaming ops: state persists across micro-batches."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from geolake_spark.streaming import ingest, stateful
+
+from conftest import ROOT
 
 
 def _start(df, out, ckpt):
@@ -291,12 +295,12 @@ def test_monitor_job_state_survives_restart(spark, tmp_path, monkeypatch):
             "--slack-cents", "100", "--threshold-cents", "800",
             "--cores", "4"]
     monkeypatch.setattr(sys, "argv", argv)
-    runpy.run_path("/root/repo/jobs/monitor.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/monitor.py"), run_name="__main__")
     mid = {r.entity: r.n_obs for r in spark.read.parquet(out).collect()}
     assert mid == {1: 10, 2: 10}         # first half only
 
     second.coalesce(1).write.mode("append").parquet(drop)
-    runpy.run_path("/root/repo/jobs/monitor.py", run_name="__main__")
+    runpy.run_path(os.path.join(ROOT, "jobs/monitor.py"), run_name="__main__")
     latest = {}
     for r in spark.read.parquet(out).collect():
         if r.entity not in latest or r.n_obs > latest[r.entity].n_obs:
