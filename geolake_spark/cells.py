@@ -1,8 +1,11 @@
 """Vectorized NumPy geo-cell kernels (no external geo libraries).
 
 This module is the numeric core of the engine: everything here operates on
-NumPy arrays so the Spark layer can wrap it in Arrow-batched pandas UDFs
-(no per-row Python — BASELINE.json `input_hint`).
+NumPy arrays.  The Spark layer mirrors the grid and tile math as JVM column
+expressions (functions/geo.py) and wraps only the S2 ids in an Arrow-batched
+pandas UDF (no per-row Python — BASELINE.json `input_hint`).  The NumPy
+kernels are the reference those columns and the ``*_sql`` twins are checked
+against.
 
 Two cell systems:
 
@@ -43,8 +46,9 @@ _IY_SHIFT = 28
 _IX_MASK = (1 << 28) - 1
 _IY_MASK = (1 << 28) - 1
 
-# Default packed resolutions for the pages data model (mirrors the
-# "H3 res 5-9 packed" requirement of BASELINE.json north_star).
+# The cell resolutions of the pages data model: ``cell_r5..cell_r9`` and
+# their array ``h3_cells`` (the "H3 res 5-9 packed" requirement of
+# BASELINE.json north_star).
 PACK_RESOLUTIONS = (5, 6, 7, 8, 9)
 
 
@@ -169,21 +173,16 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     return np.unique(ids)
 
 
-def pack_cells(lat, lon, resolutions=PACK_RESOLUTIONS) -> np.ndarray:
-    """(n,) lat/lon -> (n, len(resolutions)) int64 packed cell-id matrix."""
-    lat = np.asarray(lat, dtype=np.float64)
-    lon = np.asarray(lon, dtype=np.float64)
-    return np.stack([grid_cell(lat, lon, r) for r in resolutions], axis=1)
-
-
 def grid_cell_sql(lat_expr: str, lon_expr: str, res: int) -> str:
     """The exact SQL equivalent of :func:`grid_cell` (ANSI; runs identically
-    in Spark SQL and DuckDB — the oracle-parity contract)."""
+    in Spark SQL and DuckDB — the oracle-parity contract).  NULL when a
+    coordinate is NULL, like ``geo.grid_cell_col``."""
     nx, ny = grid_dims(res)
     return (
-        f"({res} * 72057594037927936"
+        f"(CASE WHEN ({lat_expr}) IS NOT NULL AND ({lon_expr}) IS NOT NULL"
+        f" THEN {res} * 72057594037927936"
         f" + least(greatest(cast(floor((90.0 - ({lat_expr})) / 180.0 * {ny}) as bigint), 0), {ny - 1}) * 268435456"
-        f" + least(greatest(cast(floor((({lon_expr}) + 180.0) / 360.0 * {nx}) as bigint), 0), {nx - 1}))"
+        f" + least(greatest(cast(floor((({lon_expr}) + 180.0) / 360.0 * {nx}) as bigint), 0), {nx - 1}) END)"
     )
 
 
@@ -318,15 +317,17 @@ def tile_xy(lat, lon, zoom: int) -> tuple[np.ndarray, np.ndarray]:
 
 def tile_x_sql(lon_expr: str, zoom: int) -> str:
     n = 1 << zoom
-    return (f"least(greatest(cast(floor((({lon_expr}) + 180.0) / 360.0 * {n}) as bigint), 0), {n - 1})")
+    return (f"(CASE WHEN ({lon_expr}) IS NOT NULL THEN least(greatest(cast(floor("
+            f"(({lon_expr}) + 180.0) / 360.0 * {n}) as bigint), 0), {n - 1}) END)")
 
 
 def tile_y_sql(lat_expr: str, zoom: int) -> str:
     n = 1 << zoom
     clamped = f"least(greatest({lat_expr}, -{MERCATOR_MAX_LAT}), {MERCATOR_MAX_LAT})"
     return (
-        f"least(greatest(cast(floor((1.0 - ln(tan(radians({clamped}))"
-        f" + 1.0 / cos(radians({clamped}))) / pi()) / 2.0 * {n}) as bigint), 0), {n - 1})"
+        f"(CASE WHEN ({lat_expr}) IS NOT NULL THEN"
+        f" least(greatest(cast(floor((1.0 - ln(tan(radians({clamped}))"
+        f" + 1.0 / cos(radians({clamped}))) / pi()) / 2.0 * {n}) as bigint), 0), {n - 1}) END)"
     )
 
 

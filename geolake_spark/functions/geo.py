@@ -6,9 +6,12 @@ Two tiers, deliberately:
   ``tile_x_col``/``tile_y_col``, ``haversine_col`` are pure Spark column
   expressions built from the same closed-form math as the NumPy kernels —
   they stay inside whole-stage codegen and are what the hot paths use.
-* **Pandas-UDF tier** (Arrow batches): packed multi-resolution cell arrays
-  and canonical S2 ids, where the math (Hilbert lookup) isn't expressible
-  as a SQL expression.
+* **Pandas-UDF tier** (Arrow batches): canonical S2 ids only, whose
+  Hilbert lookup isn't expressible as a SQL expression.
+
+A null coordinate gives a null cell or tile, here and in the SQL twins in
+cells.py: ``least``/``greatest`` skip nulls, so the clamps alone would put
+an unlocated row into grid row 0 or tile column 0.
 
 Reference analogue: geolake's spatial ops are delegated to geokube
 (``geobbox``/``locations`` at /root/reference/datastore/datastore/datastore.py:429-434);
@@ -38,15 +41,16 @@ def grid_cell_col(lat: Column, lon: Column, res: int) -> Column:
                  F.lit(nx - 1)).cast("bigint")
     iy = F.least(F.greatest(F.floor((F.lit(90.0) - lat) / 180.0 * ny), F.lit(0)),
                  F.lit(ny - 1)).cast("bigint")
-    return (F.lit(res) * F.lit(1 << 56).cast("bigint")
-            + iy * F.lit(1 << 28).cast("bigint") + ix)
+    return F.when(lat.isNotNull() & lon.isNotNull(),
+                  F.lit(res) * F.lit(1 << 56).cast("bigint")
+                  + iy * F.lit(1 << 28).cast("bigint") + ix)
 
 
 def tile_x_col(lon: Column, zoom: int) -> Column:
     n = 1 << zoom
-    return F.least(
+    return F.when(lon.isNotNull(), F.least(
         F.greatest(F.floor((lon + F.lit(180.0)) / 360.0 * n), F.lit(0)),
-        F.lit(n - 1)).cast("bigint")
+        F.lit(n - 1)).cast("bigint"))
 
 
 def tile_y_col(lat: Column, zoom: int) -> Column:
@@ -56,7 +60,8 @@ def tile_y_col(lat: Column, zoom: int) -> Column:
     rad = F.radians(clamped)
     yt = F.floor((F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad))
                   / F.lit(float(np.pi))) / 2.0 * n)
-    return F.least(F.greatest(yt, F.lit(0)), F.lit(n - 1)).cast("bigint")
+    return F.when(lat.isNotNull(),
+                  F.least(F.greatest(yt, F.lit(0)), F.lit(n - 1)).cast("bigint"))
 
 
 def haversine_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
@@ -157,15 +162,6 @@ def geocode_lon_sql(key: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-@pandas_udf(T.ArrayType(T.LongType()))
-def h3_cells_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    """Packed multi-resolution cell-id array (res 5..9), one Arrow batch at
-    a time (SURVEY.md §1.3 `h3_cells array<bigint>`)."""
-    mat = cells.pack_cells(lat.to_numpy(), lon.to_numpy())
-    from geolake_spark.functions.sim import _sig_series
-    return _sig_series(mat)
-
-
 @pandas_udf(T.LongType())
 def s2_cell_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
     return pd.Series(cells.s2_cell_id(lat.to_numpy(), lon.to_numpy(), level=12))
@@ -173,18 +169,21 @@ def s2_cell_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
 
 def with_geo_columns(df, lat_col: str = "lat", lon_col: str = "lon",
                      zoom: int = 8):
-    """Standard derived-column stack for the pages data model:
-    h3_cells (res 5-9 packed), per-res convenience cols, s2_cell, tile z/x/y."""
+    """Standard derived-column stack for the pages data model: per-res
+    cells ``cell_r5..cell_r9``, their array ``h3_cells``, s2_cell, tile
+    z/x/y.  A row with a null coordinate gets no cell, S2 id or tile."""
     lat, lon = F.col(lat_col), F.col(lon_col)
+    located = lat.isNotNull() & lon.isNotNull()
     out = df
     for r in cells.PACK_RESOLUTIONS:
         out = out.withColumn(f"cell_r{r}", grid_cell_col(lat, lon, r))
     return (out
-            .withColumn("h3_cells", h3_cells_udf(lat, lon))
-            .withColumn("s2_cell", s2_cell_udf(lat, lon))
+            .withColumn("h3_cells", F.when(located, F.array(
+                *[F.col(f"cell_r{r}") for r in cells.PACK_RESOLUTIONS])))
+            .withColumn("s2_cell", F.when(located, s2_cell_udf(lat, lon)))
             .withColumn("tile_z", F.lit(zoom))
-            .withColumn("tile_x", tile_x_col(lon, zoom))
-            .withColumn("tile_y", tile_y_col(lat, zoom)))
+            .withColumn("tile_x", F.when(located, tile_x_col(lon, zoom)))
+            .withColumn("tile_y", F.when(located, tile_y_col(lat, zoom))))
 
 
 # --------------------------------------------------------------- WKT

@@ -146,7 +146,7 @@ def build_pip_cover(polygons: list[dict], res: int = DEFAULT_PIP_RES) -> pd.Data
         for seg in segs:
             boundary |= _seg_hits_rects(seg, cw, ce, cs, cn)
         center_in = cells.points_in_polygon((cs + cn) / 2.0, (cw + ce) / 2.0, rings)
-        keep = boundary | (center_in & ~boundary)
+        keep = boundary | center_in
         edge_list = [[float(v) for v in seg] for seg in segs]  # [x1,y1,x2,y2]
         shift = bool(_crosses_antimeridian(rings))
         for c, b in zip(cover[keep], boundary[keep]):
@@ -158,45 +158,12 @@ def build_pip_cover(polygons: list[dict], res: int = DEFAULT_PIP_RES) -> pd.Data
     return pd.DataFrame(rows)
 
 
-# Cover DataFrames are cached per (session, polygon set, res): building one
-# via createDataFrame(pandas-with-nested-arrays) costs >1s of driver time
-# (pickle serialization), while a pyarrow parquet round-trip through the
-# session's local dir is ~50ms and the cached read is free on reuse.
-_COVER_CACHE: dict = {}
-
-
-def _cover_df(spark: SparkSession, cover_pdf: pd.DataFrame,
-              polygons: list[dict], res: int) -> DataFrame:
-    import hashlib
-    import json
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq
-    key = (id(spark._jsparkSession),
-           hashlib.md5(json.dumps([(p["polygon_id"], p["rings"])
-                                   for p in polygons], sort_keys=True)
-                       .encode()).hexdigest(), res)
-    if key in _COVER_CACHE:
-        return _COVER_CACHE[key]
-    tbl = pa.table({
-        "cell": pa.array(cover_pdf["cell"], pa.int64()),
-        "polygon_id": pa.array(cover_pdf["polygon_id"], pa.int64()),
-        "interior": pa.array(cover_pdf["interior"], pa.bool_()),
-        "edges": pa.array(list(cover_pdf["edges"]),
-                          pa.list_(pa.list_(pa.float64()))),
-        "shift": pa.array(cover_pdf["shift"], pa.bool_()),
-    })
-    # the session's first spill directory (session.get_spark sets it)
-    base = (spark.sparkContext.getConf().get("spark.local.dir")
-            or tempfile.gettempdir()).split(",")[0]
-    os.makedirs(base, exist_ok=True)
-    path = os.path.join(base, f"pip-cover-{key[1]}-{res}.parquet")
-    if not os.path.exists(path):
-        pq.write_table(tbl, path)
-    df = spark.read.parquet(path)
-    _COVER_CACHE[key] = df
-    return df
+_COVER_SCHEMA = T.StructType([
+    T.StructField("cell", T.LongType()),
+    T.StructField("polygon_id", T.LongType()),
+    T.StructField("interior", T.BooleanType()),
+    T.StructField("edges", T.ArrayType(T.ArrayType(T.DoubleType()))),
+    T.StructField("shift", T.BooleanType())])
 
 
 def pip_join(points: DataFrame, polygons: list[dict],
@@ -240,7 +207,7 @@ def pip_join(points: DataFrame, polygons: list[dict],
                     f"match; pass matching res or omit it")
     if res is None:
         res = choose_pip_res(polygons) if cell_col is None else DEFAULT_PIP_RES
-    cover_pdf = build_pip_cover(polygons, res)
+    cover = build_pip_cover(polygons, res)
     cell = (F.col(cell_col) if cell_col else
             grid_cell_col(F.col(lat_col), F.col(lon_col), res))
     pts = points.withColumn("_cell", cell)
@@ -255,7 +222,9 @@ def pip_join(points: DataFrame, polygons: list[dict],
     # Arithmetic mirrors cells.points_in_ring exactly (same IEEE double ops,
     # same order): crossing iff (y1 > lat) != (y2 > lat) and
     # lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1); odd crossings = inside.
-    cov = F.broadcast(_cover_df(spark, cover_pdf, polygons, res))
+    # The cover is rebuilt on every call and reaches Spark as an Arrow local
+    # relation (a LocalTableScan), so nothing is written or cached.
+    cov = F.broadcast(_local_frame(spark, cover, _COVER_SCHEMA))
     joined = (pts.join(cov, pts["_cell"] == cov["cell"], "inner")
               .drop("cell", "_cell"))
     lon2 = F.when(F.col("shift") & (lon < 0.0), lon + F.lit(360.0)).otherwise(lon)
@@ -321,13 +290,16 @@ def _box_sizes(probes: list, k: int, res: int,
     return out
 
 
-def _local_frame(spark: SparkSession, rows: list, schema: T.StructType
+def _local_frame(spark: SparkSession, rows, schema: T.StructType
                  ) -> DataFrame:
-    """``rows`` as a local relation: an Arrow table, not a Python RDD (which
-    a list would give, starting Python workers), also when empty."""
-    return spark.createDataFrame(pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows],
-        schema=to_arrow_schema(schema)))
+    """``rows`` (tuples, or a pandas frame with ``schema``'s columns) as a
+    local relation: an Arrow table, not a Python RDD (which a list would
+    give, starting Python workers), also when empty.  Going through pandas
+    converts column-wise: ~17 ms for a 117k-row PIP cover on a 4-core box,
+    against ~0.5 s as per-row dicts."""
+    return spark.createDataFrame(pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=schema.names),
+        schema=to_arrow_schema(schema), preserve_index=False))
 
 
 def knn_join_table(points: DataFrame, probes: DataFrame, k: int,

@@ -8,10 +8,9 @@ empty tiles are naturally absent (reference skips empty cubes,
 executor/app/main.py:138-143).
 
 Skew: urban tiles are orders of magnitude hotter than rural ones
-(zipf hosts -> city clusters).  ``rollup_tiles`` therefore aggregates in two
-phases with an explicit salt on the hot keys — partial (tile, salt) aggregate
-first, then the final tile aggregate — so no single reducer owns a mega-tile.
-AQE skew-join handling stays on as the safety net (session.py).
+(zipf hosts -> city clusters).  The tile count is algebraic, so one
+``groupBy`` is enough: the map-side partial count cuts a hot tile down to one
+row per task before the shuffle, and no reducer receives a mega-tile's pages.
 """
 
 from __future__ import annotations
@@ -20,8 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geolake_spark.functions.geo import tile_x_col, tile_y_col
-
-DEFAULT_SALT_BUCKETS = 16
 
 
 def assign_tiles(df: DataFrame, zoom: int,
@@ -32,27 +29,13 @@ def assign_tiles(df: DataFrame, zoom: int,
 
 
 def rollup_tiles(df: DataFrame, zoom: int,
-                 lat_col: str = "lat", lon_col: str = "lon",
-                 salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Exact per-tile page count ``page_count``, salted two-phase agg.
-
-    Phase 1 groups by (tile, salt) — map-side combine spreads a hot tile over
-    ``salt_buckets`` reducers; phase 2 sums the partials per tile.
-    ``salt_buckets <= 0`` groups by tile in one phase.
-    """
-    tiled = assign_tiles(df, zoom, lat_col, lon_col)
-    if salt_buckets <= 0:
-        # algebraic count: map-side partial aggregation already neutralizes
-        # hot keys — salting only helps holistic aggregates (measured)
-        return (tiled.groupBy("tile_z", "tile_x", "tile_y")
-                .agg(F.count("*").alias("page_count")))
-    salt = (F.xxhash64("url") % salt_buckets).cast("int") if "url" in df.columns \
-        else (F.spark_partition_id() % salt_buckets)
-    partial = (tiled.withColumn("_salt", salt)
-               .groupBy("tile_z", "tile_x", "tile_y", "_salt")
-               .agg(F.count("*").alias("_cnt")))
-    return (partial.groupBy("tile_z", "tile_x", "tile_y")
-            .agg(F.sum("_cnt").alias("page_count")))
+                 lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+    """Exact per-tile page count ``page_count``; a page without a location
+    lands in no tile."""
+    located = df.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
+    return (assign_tiles(located, zoom, lat_col, lon_col)
+            .groupBy("tile_z", "tile_x", "tile_y")
+            .agg(F.count("*").alias("page_count")))
 
 
 def regrid(df: DataFrame, zoom: int, value_col: str = "value",
@@ -91,7 +74,7 @@ def build_pyramid(df: DataFrame, max_zoom: int, min_zoom: int = 0,
     exact, since Web-Mercator tiles nest) — at scale this is the difference
     between one 100TB scan and (max_zoom - min_zoom + 1) of them.
     """
-    levels = [rollup_tiles(df, max_zoom, lat_col, lon_col, salt_buckets=0)]
+    levels = [rollup_tiles(df, max_zoom, lat_col, lon_col)]
     cur = levels[0]
     for z in range(max_zoom - 1, min_zoom - 1, -1):
         cur = (cur.select(F.lit(z).alias("tile_z"),

@@ -178,7 +178,8 @@ def read_patterned(spark, directory: str, pattern: str,
         # valid product, fully-selective filter -> empty result, full
         # schema.  Inferred over ALL pattern-matching files, not just the
         # first: with evolving parquet schemas the empty result must match
-        # the shape a row-matching load would produce (round-5 ADVICE fix).
-        schema_df = _with_attrs(reader.load(matched_all))
-        return spark.createDataFrame([], schema_df.schema)
+        # the shape a row-matching load would produce.  ``limit(0)`` keeps
+        # it a plan whose size statistic is 0 bytes, so the estimate says
+        # empty (an empty Python-side frame is sized at Long.MaxValue).
+        return _with_attrs(reader.load(matched_all)).limit(0)
     return _with_attrs(reader.load(chosen))

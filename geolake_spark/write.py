@@ -62,6 +62,11 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
     """
     if not os.path.exists(os.path.join(table.meta_dir, "table-spec.json")):
         table.init(df.schema.json(), partition_cols)
+    spec_cols = table.table_spec()["partition_cols"]
+    if list(partition_cols) != spec_cols:
+        raise ValueError(
+            f"partition columns {list(partition_cols)} differ from the "
+            f"table's {spec_cols}")
 
     committed = table.committed_partitions() if resume else []
     skip_keys = {tuple(p[c] for c in partition_cols) for p in committed}

@@ -33,8 +33,7 @@ def main() -> None:
     pages = spark.read.parquet(args.pages)
     rolled = tiles.rollup_tiles(pages, zoom=args.zoom)
     info = write_snapshot(rolled, IcebergishTable(args.table),
-                          ["tile_z", "tile_x"], resume=args.resume,
-                          lat_col="_none", lon_col="_none")
+                          ["tile_z", "tile_x"], resume=args.resume)
     print(info)
     if args.geojson:
         tiles.tiles_geojson(rolled).write.mode("overwrite").text(args.geojson)

@@ -198,3 +198,21 @@ def test_empty_result_schema_merges_all_matching_files(spark, tmp_path):
         fmt="parquet")
     assert empty.count() == 0
     assert "extra" in empty.columns and "value" in empty.columns
+
+
+def test_empty_pattern_product_is_estimated_empty(spark, tmp_path):
+    """A filter that prunes every file gives a plan sized at 0 bytes, so
+    the catalog estimate is empty and execute rejects it as empty, not as
+    too big."""
+    from geolake_spark.api import Catalog
+    from geolake_spark.plans.estimate import TooBigRequestError
+    _write_patterned_drop(tmp_path)
+    (tmp_path / "cat.json").write_text("""{
+      "datasets": {"clim": {"products": {"spread": {
+        "path": "{{ CATALOG_DIR }}/drop/{var}_ens_spread_{res}deg.parquet",
+        "format": "parquet"}}}}}""")
+    cat = Catalog.from_file(spark, str(tmp_path / "cat.json"))
+    query = {"filters": {"var": "nope"}}
+    assert cat.estimate("clim", "spread", query)["bytes"] == 0
+    with pytest.raises(TooBigRequestError, match="estimated result is empty"):
+        cat.execute("clim", "spread", query)

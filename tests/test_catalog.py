@@ -213,6 +213,18 @@ def test_uncommitted_write_is_not_read(spark, table):
     assert sorted(r.url for r in table.read(spark).collect()) == committed
 
 
+def test_write_snapshot_refuses_other_partition_cols(spark, table):
+    """Partition columns that differ from the table spec are refused before
+    anything is written, so the table keeps reading."""
+    write_snapshot(_sample(spark, ["en"]), table, ["lang"])
+    files = sorted(os.listdir(table.data_dir))
+    with pytest.raises(ValueError, match=r"\['url'\].*\['lang'\]"):
+        write_snapshot(_sample(spark, ["de"]), table, ["url"])
+    assert sorted(os.listdir(table.data_dir)) == files
+    assert table.current_snapshot_id() == 1
+    assert table.read(spark).count() == 20
+
+
 def test_odd_partition_values_round_trip(spark, table):
     """Null, boolean and '/'-containing partition values survive a write,
     a resume, a merge and a compaction."""

@@ -58,13 +58,6 @@ def test_k_ring_size_and_wrap():
     assert len(cells.k_ring(pole, 1)) == 6  # clamped at the pole row
 
 
-def test_pack_cells_matches_single_res():
-    m = cells.pack_cells(LAT[:10], LON[:10])
-    assert m.shape == (10, 5)
-    for j, r in enumerate(cells.PACK_RESOLUTIONS):
-        assert np.array_equal(m[:, j], cells.grid_cell(LAT[:10], LON[:10], r))
-
-
 def test_haversine_goldens():
     assert abs(cells.haversine_km(0, 0, 0, 1)[()] - 111.195) < 0.01
     d = cells.haversine_km(51.5074, -0.1278, 48.8566, 2.3522)

@@ -88,6 +88,26 @@ def test_pip_cover_classification():
                                               float(s), float(n))
 
 
+def test_pip_join_cover_is_local_and_writes_nothing(spark, pages, pages_pdf):
+    """A polygon set no earlier call has seen: its cover plans as a
+    LocalTableScan (the pages are the only file scan) and the call writes
+    nothing under spark.local.dir."""
+    import os
+    polys = [{"polygon_id": 901,
+              "rings": [[[-60.0, -20.0], [20.0, -20.0], [20.0, 30.0],
+                         [-60.0, 30.0], [-60.0, -20.0]]]}]
+    local_dir = spark.sparkContext.getConf().get("spark.local.dir").split(",")[0]
+    before = sorted(os.listdir(local_dir))
+    out = joins.pip_join(pages, polys, res=6)
+    got = {(r["url"], r["polygon_id"]) for r in
+           out.select("url", "polygon_id").collect()}
+    assert got == brute_pip(pages_pdf, polys) and got
+    assert sorted(os.listdir(local_dir)) == before
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert plan.count("FileScan") == 1
+
+
 def test_knn_matches_brute_force(spark, pages, pages_pdf):
     probes = pd.DataFrame({
         "query_id": [1, 2, 3],

@@ -1,5 +1,5 @@
-"""Tile materialization: rollup/salt equivalence, regrid, GeoJSON export,
-partitioned writes."""
+"""Tile materialization: the geo column stack, the one-phase rollup,
+regrid, GeoJSON export, partitioned writes."""
 
 import json
 
@@ -8,17 +8,57 @@ import pytest
 from pyspark.sql import functions as F
 
 from geolake_spark import cells
+from geolake_spark.functions import geo
 from geolake_spark.operators import tiles
 
+GEO_COLS = ([f"cell_r{r}" for r in cells.PACK_RESOLUTIONS]
+            + ["h3_cells", "s2_cell", "tile_x", "tile_y"])
 
-def test_salted_rollup_equals_direct(spark, pages):
-    direct = (tiles.assign_tiles(pages, 7)
-              .groupBy("tile_z", "tile_x", "tile_y")
-              .agg(F.count("*").alias("page_count")))
-    salted = tiles.rollup_tiles(pages, 7, salt_buckets=16)
-    a = {(r["tile_x"], r["tile_y"]): r["page_count"] for r in direct.collect()}
-    b = {(r["tile_x"], r["tile_y"]): r["page_count"] for r in salted.collect()}
-    assert a == b
+
+def _with_unlocated(spark, pages):
+    """The pages' url/lat/lon plus one row without lat and one without lon."""
+    unlocated = spark.createDataFrame(
+        [("no-lat", None, 20.0), ("no-lon", 10.0, None)],
+        "url string, lat double, lon double")
+    return pages.select("url", "lat", "lon").unionByName(unlocated)
+
+
+def test_with_geo_columns_matches_numpy(spark, pages):
+    """Every derived column equals its NumPy kernel; a row with a null
+    coordinate gets no cell, S2 id or tile."""
+    out = geo.with_geo_columns(_with_unlocated(spark, pages))
+    pdf = out.where(F.col("lat").isNotNull() & F.col("lon").isNotNull()) \
+        .toPandas()
+    lat, lon = pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
+    assert len(pdf) == pages.count()
+    cell_cols = [f"cell_r{r}" for r in cells.PACK_RESOLUTIONS]
+    for r, c in zip(cells.PACK_RESOLUTIONS, cell_cols):
+        assert np.array_equal(pdf[c].to_numpy(), cells.grid_cell(lat, lon, r))
+    assert [list(v) for v in pdf["h3_cells"]] == pdf[cell_cols].values.tolist()
+    assert np.array_equal(pdf["s2_cell"].to_numpy(),
+                          cells.s2_cell_id(lat, lon, level=12))
+    xt, yt = cells.tile_xy(lat, lon, 8)
+    assert np.array_equal(pdf["tile_x"].to_numpy(), xt)
+    assert np.array_equal(pdf["tile_y"].to_numpy(), yt)
+    assert (pdf["tile_z"] == 8).all()
+    unlocated = out.where(F.col("url").isin("no-lat", "no-lon")).collect()
+    assert len(unlocated) == 2
+    for row in unlocated:
+        assert all(row[c] is None for c in GEO_COLS), row
+
+
+def test_rollup_tiles_matches_numpy_one_shuffle(spark, pages):
+    """The counts equal a NumPy group-by of cells.tile_xy over the located
+    pages (unlocated pages land in no tile), from one shuffle."""
+    out = tiles.rollup_tiles(_with_unlocated(spark, pages), 7)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1
+    got = {(r["tile_x"], r["tile_y"]): r["page_count"] for r in out.collect()}
+    pdf = pages.select("lat", "lon").toPandas()
+    xt, yt = cells.tile_xy(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), 7)
+    keys, counts = np.unique(np.stack([xt, yt], axis=1), axis=0,
+                             return_counts=True)
+    assert got == {(int(x), int(y)): int(c) for (x, y), c in zip(keys, counts)}
 
 
 def test_regrid_values_match_pandas(spark, pages):
