@@ -43,14 +43,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _docs_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + deterministic arithmetic geocode (oracle-parity columns)."""
     d = _t(spark, sf_dir, "documents")
-    return (d.withColumn("lat", geo.geocode_lat_col(F.col("doc_id")))
-            .withColumn("lon", geo.geocode_lon_col(F.col("doc_id"))))
+    return (d.withColumn("lat", geo.geocode_lat(F.col("doc_id")))
+            .withColumn("lon", geo.geocode_lon(F.col("doc_id"))))
 
 
 def _events_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
-    return (e.withColumn("lat", geo.geocode_lat_col(F.col("event_id")))
-            .withColumn("lon", geo.geocode_lon_col(F.col("event_id"))))
+    return (e.withColumn("lat", geo.geocode_lat(F.col("event_id")))
+            .withColumn("lon", geo.geocode_lon(F.col("event_id"))))
 
 
 _DOCS_GEO_SQL = (
@@ -158,8 +158,8 @@ def q_knn_table(spark, sf_dir):
     d = _docs_geo(spark, sf_dir)
     probes = (spark.range(400)
               .select(F.col("id").alias("query_id"),
-                      geo.geocode_lat_col(F.col("id") + 1000000).alias("lat"),
-                      geo.geocode_lon_col(F.col("id") + 1000000).alias("lon")))
+                      geo.geocode_lat(F.col("id") + 1000000).alias("lat"),
+                      geo.geocode_lon(F.col("id") + 1000000).alias("lon")))
     out = joins.knn_join_table(d, probes, k=5, res=5, id_cols=["doc_id"])
     return out.select("query_id", "doc_id",
                       F.round("dist_km", 6).alias("dist_km"),
@@ -174,8 +174,8 @@ def q_radius_join(spark, sf_dir):
     d = _docs_geo(spark, sf_dir)
     probes = (spark.range(400)
               .select(F.col("id").alias("query_id"),
-                      geo.geocode_lat_col(F.col("id") + 1000000).alias("lat"),
-                      geo.geocode_lon_col(F.col("id") + 1000000).alias("lon")))
+                      geo.geocode_lat(F.col("id") + 1000000).alias("lat"),
+                      geo.geocode_lon(F.col("id") + 1000000).alias("lon")))
     out = joins.radius_join(d, probes, radius_km=300.0, id_cols=["doc_id"])
     return out.select("query_id", "doc_id",
                       F.round("dist_km", 6).alias("dist_km"))
@@ -1936,8 +1936,8 @@ def q_stay_points(spark, sf_dir):
     keeps multi-event stays and drops lone pings."""
     e = _t(spark, sf_dir, "events")
     key = F.col("user_id") * 16 + F.col("event_id") % 3
-    ev = (e.withColumn("lat", geo.geocode_lat_col(key))
-          .withColumn("lon", geo.geocode_lon_col(key)))
+    ev = (e.withColumn("lat", geo.geocode_lat(key))
+          .withColumn("lon", geo.geocode_lon(key)))
     return trips.stay_points(ev, res=4, min_minutes=600.0)
 
 
@@ -3126,10 +3126,10 @@ _EVENTS_WALK_SQL = (
 def _events_walk(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     i = F.col("event_id")
-    lat = (geo.geocode_lat_col(F.col("user_id"))
+    lat = (geo.geocode_lat(F.col("user_id"))
            + ((i * 37) % 200 - 100) / F.lit(1000.0)
            + F.when(i % 17 == 0, F.lit(20.0)).otherwise(F.lit(0.0)))
-    lon = (geo.geocode_lon_col(F.col("user_id"))
+    lon = (geo.geocode_lon(F.col("user_id"))
            + ((i * 53) % 200 - 100) / F.lit(1000.0))
     return e.select("event_id", "ts", "user_id", lat.alias("lat"),
                     lon.alias("lon"))
@@ -3267,8 +3267,8 @@ def _events_clustered(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     i = F.col("event_id")
     grp = F.col("user_id") % 8
-    lat = geo.geocode_lat_col(grp) + ((i * 37) % 200 - 100) / F.lit(1000.0)
-    lon = geo.geocode_lon_col(grp) + ((i * 53) % 200 - 100) / F.lit(1000.0)
+    lat = geo.geocode_lat(grp) + ((i * 37) % 200 - 100) / F.lit(1000.0)
+    lon = geo.geocode_lon(grp) + ((i * 53) % 200 - 100) / F.lit(1000.0)
     return e.select("event_id", "ts", "user_id", lat.alias("lat"),
                     lon.alias("lon"))
 

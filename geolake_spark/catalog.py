@@ -94,12 +94,13 @@ class IcebergishTable:
             out[_key(man["partition"])] = (name, man)
         return out
 
-    def manifests(self, snap_id: int | None = None) -> list[dict]:
-        return [m for _, m in self._live(self.snapshot(snap_id)).values()]
+    def manifests(self) -> list[dict]:
+        """The current snapshot's live manifests."""
+        return [m for _, m in self._live(self.snapshot()).values()]
 
-    def committed_partitions(self, snap_id: int | None = None) -> list[dict]:
+    def committed_partitions(self) -> list[dict]:
         """Partition-value dicts present in the current snapshot."""
-        return [m["partition"] for m in self.manifests(snap_id)]
+        return [m["partition"] for m in self.manifests()]
 
     def history(self) -> list[dict]:
         """Snapshot log, oldest -> newest (metadata only): follow
@@ -297,21 +298,21 @@ class IcebergishTable:
                 .parquet(*[os.path.join(self.data_dir, f)
                            for m in manifests for f in m["files"]]))
 
-    def read_changes(self, spark: SparkSession, from_snap: int | None,
-                     to_snap: int | None = None) -> DataFrame:
+    def read_changes(self, spark: SparkSession,
+                     from_snap: int | None) -> DataFrame:
         """Incremental (CDC-style) scan: only partitions ADDED or
-        REWRITTEN since ``from_snap`` reach the reader, planned purely
-        from manifest metadata (:meth:`diff`) — the consumer contract
-        that lets a downstream job re-process a 10^12-row table's few
-        changed partitions instead of the whole table.  Rewritten
-        partitions are re-read WHOLE, from the files ``to_snap`` lists:
-        ``commit`` deletes the files its snapshot stops listing, so
-        per-row deltas and read-at-old-snapshot are not offered (the
-        :meth:`diff` time-travel note).  Nothing changed -> an empty
-        DataFrame with the table schema."""
+        REWRITTEN between ``from_snap`` and the current snapshot reach the
+        reader, planned purely from manifest metadata (:meth:`diff`) — the
+        consumer contract that lets a downstream job re-process a
+        10^12-row table's few changed partitions instead of the whole
+        table.  Rewritten partitions are re-read WHOLE, from the files the
+        current snapshot lists: ``commit`` deletes the files its snapshot
+        stops listing, so per-row deltas and reads at an older snapshot
+        are not offered (the :meth:`diff` time-travel note).  Nothing
+        changed -> an empty DataFrame with the table schema."""
         a = self._live(self.snapshot(from_snap)
                        if from_snap is not None else None)
-        b = self._live(self.snapshot(to_snap))
+        b = self._live(self.snapshot())
         return self._scan(spark, [m for k, (name, m) in b.items()
                                   if k not in a or a[k][0] != name])
 

@@ -29,6 +29,13 @@ from pyspark.sql.functions import pandas_udf
 
 from geolake_spark import cells
 
+# The coordinate columns every table on the geo/table path carries
+# (FIXTURES.md §1-4).  A source with other names is renamed at the source,
+# by ``sources.adapters.rename_coords``.
+LAT, LON = "lat", "lon"
+# Zoom of the tile columns ``with_geo_columns`` derives.
+TILE_ZOOM = 8
+
 # ---------------------------------------------------------------------------
 # Expression tier (whole-stage codegen; identical math to cells.py/SQL oracle)
 # ---------------------------------------------------------------------------
@@ -131,14 +138,14 @@ def bbox_filter(lat: Column, lon: Column,
 N_CITIES = 50
 
 
-def geocode_lat_col(key: Column) -> Column:
+def geocode_lat(key: Column) -> Column:
     city = key % N_CITIES
     clat = ((city * 7919) % 140).cast("double") - 70.0
     jitter = ((key * 2654435761) % 20000).cast("double") / 10000.0 - 1.0
     return F.least(F.greatest(clat + jitter, F.lit(-89.9)), F.lit(89.9))
 
 
-def geocode_lon_col(key: Column) -> Column:
+def geocode_lon(key: Column) -> Column:
     city = key % N_CITIES
     clon = ((city * 104729) % 340).cast("double") - 170.0
     jitter = ((key * 1610612741) % 20000).cast("double") / 10000.0 - 1.0
@@ -167,12 +174,12 @@ def s2_cell_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
     return pd.Series(cells.s2_cell_id(lat.to_numpy(), lon.to_numpy(), level=12))
 
 
-def with_geo_columns(df, lat_col: str = "lat", lon_col: str = "lon",
-                     zoom: int = 8):
+def with_geo_columns(df):
     """Standard derived-column stack for the pages data model: per-res
     cells ``cell_r5..cell_r9``, their array ``h3_cells``, s2_cell, tile
-    z/x/y.  A row with a null coordinate gets no cell, S2 id or tile."""
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    z/x/y at ``TILE_ZOOM``.  A row with a null coordinate gets no cell, S2
+    id or tile."""
+    lat, lon = F.col(LAT), F.col(LON)
     located = lat.isNotNull() & lon.isNotNull()
     out = df
     for r in cells.PACK_RESOLUTIONS:
@@ -181,9 +188,9 @@ def with_geo_columns(df, lat_col: str = "lat", lon_col: str = "lon",
             .withColumn("h3_cells", F.when(located, F.array(
                 *[F.col(f"cell_r{r}") for r in cells.PACK_RESOLUTIONS])))
             .withColumn("s2_cell", F.when(located, s2_cell_udf(lat, lon)))
-            .withColumn("tile_z", F.lit(zoom))
-            .withColumn("tile_x", F.when(located, tile_x_col(lon, zoom)))
-            .withColumn("tile_y", F.when(located, tile_y_col(lat, zoom))))
+            .withColumn("tile_z", F.lit(TILE_ZOOM))
+            .withColumn("tile_x", F.when(located, tile_x_col(lon, TILE_ZOOM)))
+            .withColumn("tile_y", F.when(located, tile_y_col(lat, TILE_ZOOM))))
 
 
 # --------------------------------------------------------------- WKT

@@ -384,27 +384,6 @@ def make_minhash_udf(num_perm: int = 64, n: int = 3, seed: int = 1):
     return minhash_udf
 
 
-def make_signature_udf(num_perm: int = 64, n: int = 3, seed: int = 1):
-    """MinHash AND SimHash from ONE tokenize + bulk-FNV pass (struct UDF).
-
-    The two signatures share the per-token 64-bit FNV hashes — computing
-    them in separate UDFs tokenizes and hashes every document twice, which
-    was the dominant cost of the round-2 signature tier (the two kernels
-    themselves are cheap reduceat passes over the shared hash array).
-    Outputs are bit-identical to :func:`make_minhash_udf` / `simhash_udf`.
-    """
-    @pandas_udf(T.StructType([
-        T.StructField("minhash", T.ArrayType(T.IntegerType())),
-        T.StructField("simhash", T.LongType())]))
-    def signature_udf(text: pd.Series) -> pd.DataFrame:
-        hv, tok_counts = _token_hashes_batch(text)
-        mh = _minhash_from_token_hashes(hv, tok_counts, len(text),
-                                        num_perm, n, seed)
-        sh = _simhash_from_token_hashes(hv, tok_counts, len(text))
-        return pd.DataFrame({"minhash": _sig_series(mh), "simhash": sh})
-    return signature_udf
-
-
 def lsh_bands(df, sig_col: str = "minhash", num_perm: int = 64, bands: int = 16):
     """Explode a signature into (band_id, band_hash) rows for bucket joins.
     rows_per_band = num_perm // bands; candidate pairs share any bucket.

@@ -305,10 +305,6 @@ def fingerprint_col(text: Column) -> Column:
     return F.md5(text)
 
 
-def fingerprint_sql(text_expr: str) -> str:
-    return f"md5({text_expr})"
-
-
 # ---------------------------------------------------------------------------
 # Repetition metrics (Gopher-style within-document filters)
 # ---------------------------------------------------------------------------

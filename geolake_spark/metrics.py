@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geolake_spark.functions.geo import grid_cell_col
+from geolake_spark.functions.geo import LAT, LON, grid_cell_col
 
 HISTOGRAM_RES = 5
 
@@ -23,14 +23,14 @@ def _spark_order(v):
     return (isinstance(v, float) and math.isnan(v), v)
 
 
-def partition_metrics(df: DataFrame, partition_cols: list[str],
-                      lat_col: str = "lat", lon_col: str = "lon") -> list[dict]:
+def partition_metrics(df: DataFrame, partition_cols: list[str]) -> list[dict]:
     """One dict per partition: {partition, row_count, cell_histogram,
     column_stats, files}.  ``df`` is a file scan: ``files`` is the set of
     ``_metadata.file_path`` URIs of the files holding the partition's rows.
 
     cell_histogram: res-5 grid-cell -> row count (the coarse spatial
-    fingerprint recorded in every manifest).  column_stats: per numeric
+    fingerprint recorded in every manifest); a table without both
+    coordinate columns gets one ``"-1"`` bucket.  column_stats: per numeric
     column min/max/null-count — the Iceberg-style data-skipping payload
     (catalog.read_where prunes partitions whose [min, max] misses the
     predicate range without opening a file).  Strings are deliberately
@@ -47,8 +47,8 @@ def partition_metrics(df: DataFrame, partition_cols: list[str],
     stat_cols = [f.name for f in df.schema.fields
                  if isinstance(f.dataType, num)
                  and f.name not in partition_cols]
-    has_geo = lat_col in df.columns and lon_col in df.columns
-    cell = (grid_cell_col(F.col(lat_col), F.col(lon_col), HISTOGRAM_RES)
+    has_geo = LAT in df.columns and LON in df.columns
+    cell = (grid_cell_col(F.col(LAT), F.col(LON), HISTOGRAM_RES)
             if has_geo else F.lit(-1))
     aggs = [F.count("*").alias("cnt"),
             F.collect_set("_metadata.file_path").alias("files")]

@@ -36,10 +36,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from geolake_spark import cells
-from geolake_spark.functions.geo import grid_cell_col, haversine_col
+from geolake_spark.functions.geo import LAT, LON, grid_cell_col, haversine_col
 
 DEFAULT_PIP_RES = 7
 DEFAULT_KNN_RES = 6
+# cover-cell budget of choose_pip_res: the cover is built on the driver
+# and broadcast
+MAX_PIP_COVER_CELLS = 8192
 
 # ---------------------------------------------------------------------------
 # Point-in-polygon
@@ -100,7 +103,7 @@ def _norm_lon_for(rings: list[np.ndarray], lon: np.ndarray) -> np.ndarray:
     return lon
 
 
-def choose_pip_res(polygons: list[dict], max_cover_cells: int = 8192) -> int:
+def choose_pip_res(polygons: list[dict]) -> int:
     """Smallest resolution whose estimated total bbox cover fits the budget.
 
     The cover table is broadcast and built on the driver — it must stay small
@@ -114,7 +117,7 @@ def choose_pip_res(polygons: list[dict], max_cover_cells: int = 8192) -> int:
             s, n, w, e = cells.polygon_bbox(rings)
             total += max(1, int((e - w) / 360.0 * nx) + 1) * \
                 max(1, int((n - s) / 180.0 * ny) + 1)
-        if total <= max_cover_cells:
+        if total <= MAX_PIP_COVER_CELLS:
             return res
     return 2
 
@@ -168,7 +171,6 @@ _COVER_SCHEMA = T.StructType([
 
 def pip_join(points: DataFrame, polygons: list[dict],
              res: int | None = None,
-             lat_col: str = "lat", lon_col: str = "lon",
              cell_col: str | None = None) -> DataFrame:
     """points x polygons -> points rows + ``polygon_id`` (inner, 1 row per
     containing polygon).
@@ -208,10 +210,9 @@ def pip_join(points: DataFrame, polygons: list[dict],
     if res is None:
         res = choose_pip_res(polygons) if cell_col is None else DEFAULT_PIP_RES
     cover = build_pip_cover(polygons, res)
-    cell = (F.col(cell_col) if cell_col else
-            grid_cell_col(F.col(lat_col), F.col(lon_col), res))
+    lat, lon = F.col(LAT), F.col(LON)
+    cell = F.col(cell_col) if cell_col else grid_cell_col(lat, lon, res)
     pts = points.withColumn("_cell", cell)
-    lat, lon = F.col(lat_col), F.col(lon_col)
 
     # ONE scan, one broadcast join.  Boundary cover rows carry the polygon's
     # edge array [x1,y1,x2,y2]*; interior rows carry [].  The exact ray-cast
@@ -304,12 +305,11 @@ def _local_frame(spark: SparkSession, rows, schema: T.StructType
 
 def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
                    res: int = DEFAULT_KNN_RES,
-                   lat_col: str = "lat", lon_col: str = "lon",
                    id_cols: list[str] | None = None) -> DataFrame:
     """Exact k nearest ``points`` per probe (SURVEY.md §2.3 J2).
 
-    ``probes``: DataFrame (query_id, lat, lon), named by ``lat_col`` and
-    ``lon_col`` like the points.  It is collected to the driver, which
+    ``probes``: DataFrame (query_id, lat, lon); the points carry lat and
+    lon too.  It is collected to the driver, which
     sizes and certifies every probe's box: the join is meant for probe
     tables of a few hundred rows (no caller uses more than 400).
     Returns (query_id, q_lat, q_lon, *id_cols, dist_km, rank), ties
@@ -331,8 +331,8 @@ def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
     deg_per_cell = 180.0 / ny
     band_w = 180.0 / _N_BANDS
 
-    probe_rows = probes.select("query_id", lat_col, lon_col).collect()
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    probe_rows = probes.select("query_id", LAT, LON).collect()
+    lat, lon = F.col(LAT), F.col(LON)
     hist = (points.groupBy(grid_cell_col(lat, lon, res).alias("c"))
             .count().collect())
     cell_counts = {int(r["c"]): int(r["count"]) for r in hist
@@ -371,7 +371,7 @@ def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
     # A point inside the lat box lies in one of the box's bands (floor is
     # monotone), so joining on the band with the box predicates as residual
     # filter yields the identical candidate set from a BroadcastHashJoin.
-    pts = (points.select(lat_col, lon_col, *id_cols)
+    pts = (points.select(LAT, LON, *id_cols)
            .withColumn("_band", band(lat)))
     dlon_wrap = F.least(F.abs(lon - q_lon), F.lit(360.0) - F.abs(lon - q_lon))
     w = Window.partitionBy("query_id").orderBy(
@@ -419,10 +419,7 @@ def knn_join_table(points: DataFrame, probes: DataFrame, k: int,
 
 
 def radius_join(points: DataFrame, probes: DataFrame, radius_km: float,
-                res: int | None = None,
-                lat_col: str = "lat", lon_col: str = "lon",
-                id_cols: list[str] | None = None,
-                max_cover: int = 256) -> DataFrame:
+                id_cols: list[str] | None = None) -> DataFrame:
     """Exact within-distance spatial join (distance-band join, SURVEY.md
     §2.3 family; reference nearest-select analogue datastore.py:444-455
     generalized from 1-NN to "all points within R").
@@ -433,7 +430,7 @@ def radius_join(points: DataFrame, probes: DataFrame, radius_km: float,
     1. a vectorized Arrow-batched cover UDF maps each probe to the cell ids
        of a SOUND disc cover (:func:`geolake_spark.cells.radius_cover` —
        haversine-identity lon bound, pole-safe, antimeridian-safe, coarsened
-       to quad parents so the per-probe cover is <= ``max_cover`` cells);
+       to quad parents so the per-probe cover is <= 256 cells);
     2. covers explode and equi-join the points' cell column — ONE shuffle
        hash join per cover resolution actually present (in practice one:
        coarsened tiers only appear for near-pole probes).  AQE skew-join
@@ -442,9 +439,10 @@ def radius_join(points: DataFrame, probes: DataFrame, radius_km: float,
 
     A point lands in exactly one cell per res and a probe's cover is a
     distinct cell set at one res, so (probe, point) pairs are emitted at
-    most once — no distinct needed.  ``res=None`` picks the finest res whose
-    cell height >= R (:func:`geolake_spark.cells.radius_res`), giving ~9-15
-    cover cells per probe and a candidate area ~9 R^2 vs the disc's pi R^2.
+    most once — no distinct needed.  The cover resolution is the finest
+    whose cell height >= R (:func:`geolake_spark.cells.radius_res`), giving
+    ~9-15 cover cells per probe and a candidate area ~9 R^2 vs the disc's
+    pi R^2.
 
     ``probes``: (query_id, lat, lon).  Returns (query_id, q_lat, q_lon,
     *id_cols, dist_km).
@@ -453,18 +451,17 @@ def radius_join(points: DataFrame, probes: DataFrame, radius_km: float,
     from pyspark.sql.functions import pandas_udf
 
     id_cols = id_cols or ["url"]
-    base_res = cells.radius_res(radius_km) if res is None else int(res)
+    base_res = cells.radius_res(radius_km)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def cover_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
         return pd.Series([
-            cells.radius_cover(float(la), float(lo), radius_km, base_res,
-                               max_cover=max_cover)
+            cells.radius_cover(float(la), float(lo), radius_km, base_res)
             for la, lo in zip(lat.to_numpy(), lon.to_numpy())])
 
     cov = (probes.select("query_id",
-                         F.col(lat_col).alias("q_lat"),
-                         F.col(lon_col).alias("q_lon"))
+                         F.col(LAT).alias("q_lat"),
+                         F.col(LON).alias("q_lon"))
            .withColumn("cell", F.explode(
                cover_udf(F.col("q_lat"), F.col("q_lon"))))
            .localCheckpoint(eager=True))  # reused by the res-tier scan below
@@ -473,8 +470,8 @@ def radius_join(points: DataFrame, probes: DataFrame, radius_km: float,
     res_vals = sorted(r["r"] for r in
                       cov.select(F.shiftright("cell", 56).alias("r"))
                       .distinct().collect())
-    pts = points.select(F.col(lat_col).alias("p_lat"),
-                        F.col(lon_col).alias("p_lon"), *id_cols)
+    pts = points.select(F.col(LAT).alias("p_lat"),
+                        F.col(LON).alias("p_lon"), *id_cols)
     cand = None
     for rv in res_vals:
         tier = (cov.filter(F.shiftright("cell", 56) == int(rv))

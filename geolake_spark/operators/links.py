@@ -280,12 +280,6 @@ def sitemap_entries_sql(sitemaps_sql: str, xml_expr: str = "xml",
     return _sm_explode_sql(sitemaps_sql, _SM_ENTRY_RE, xml_expr, key_exprs)
 
 
-def sitemap_children_sql(sitemaps_sql: str, xml_expr: str = "xml",
-                         key_exprs: str = "host") -> str:
-    """DuckDB mirror of :func:`sitemap_children`."""
-    return _sm_explode_sql(sitemaps_sql, _SM_CHILD_RE, xml_expr, key_exprs)
-
-
 # ---------------------------------------------------------------------------
 # Anchor-text index — terms from link anchor texts aggregated per link
 # TARGET (the classic external-description ranking signal: what other

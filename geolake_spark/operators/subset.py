@@ -14,11 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geolake_spark.functions.geo import bbox_filter, haversine_col
+from geolake_spark.functions.geo import LAT, LON, bbox_filter, haversine_col
 from geolake_spark.model import GeoQuery
 
 # Column conventions for "cube-like" long-form tables (FIXTURES.md §4)
-TS, LAT, LON, LEVEL, VAR = "ts", "lat", "lon", "level", "var"
+TS, LEVEL, VAR = "ts", "level", "var"
 
 
 def apply_filters(df: DataFrame, filters: dict) -> DataFrame:

@@ -18,35 +18,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geolake_spark.functions.geo import tile_x_col, tile_y_col
+from geolake_spark.functions.geo import LAT, LON, tile_x_col, tile_y_col
 
 
-def assign_tiles(df: DataFrame, zoom: int,
-                 lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def assign_tiles(df: DataFrame, zoom: int) -> DataFrame:
     return (df.withColumn("tile_z", F.lit(zoom))
-            .withColumn("tile_x", tile_x_col(F.col(lon_col), zoom))
-            .withColumn("tile_y", tile_y_col(F.col(lat_col), zoom)))
+            .withColumn("tile_x", tile_x_col(F.col(LON), zoom))
+            .withColumn("tile_y", tile_y_col(F.col(LAT), zoom)))
 
 
-def rollup_tiles(df: DataFrame, zoom: int,
-                 lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def rollup_tiles(df: DataFrame, zoom: int) -> DataFrame:
     """Exact per-tile page count ``page_count``; a page without a location
     lands in no tile."""
-    located = df.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
-    return (assign_tiles(located, zoom, lat_col, lon_col)
+    located = df.where(F.col(LAT).isNotNull() & F.col(LON).isNotNull())
+    return (assign_tiles(located, zoom)
             .groupBy("tile_z", "tile_x", "tile_y")
             .agg(F.count("*").alias("page_count")))
 
 
 def regrid(df: DataFrame, zoom: int, value_col: str = "value",
-           operator: str = "mean",
-           lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+           operator: str = "mean") -> DataFrame:
     """geolake ``to_regular`` (workflow.py:157-167): resample point values
     onto the regular tile grid — per-tile aggregate of ``value_col``.
     Operators mirror the resample whitelist (nan-variants skip NaN)."""
     from geolake_spark.operators.aggregates import _resolve_agg
     agg_fn, nan_skipping = _resolve_agg(operator)
-    tiled = assign_tiles(df, zoom, lat_col, lon_col)
+    tiled = assign_tiles(df, zoom)
     val = F.col(value_col)
     if nan_skipping:
         val = F.when(F.isnan(val), F.lit(None)).otherwise(val)
@@ -55,18 +52,17 @@ def regrid(df: DataFrame, zoom: int, value_col: str = "value",
                  F.count("*").alias("n_points")))
 
 
-def write_tiles(df: DataFrame, path: str, zoom: int, mode: str = "overwrite",
-                lat_col: str = "lat", lon_col: str = "lon") -> None:
-    """Materialize tile-partitioned parquet: path/tile_z=/tile_x=/tile_y=/."""
-    (assign_tiles(df, zoom, lat_col, lon_col)
+def write_tiles(df: DataFrame, path: str, zoom: int) -> None:
+    """Materialize tile-partitioned parquet, replacing whatever is at
+    ``path``: path/tile_z=/tile_x=/tile_y=/."""
+    (assign_tiles(df, zoom)
      .repartition("tile_x", "tile_y")  # co-locate a tile's rows -> 1 file/tile
-     .write.mode(mode)
+     .write.mode("overwrite")
      .partitionBy("tile_z", "tile_x", "tile_y")
      .parquet(path))
 
 
-def build_pyramid(df: DataFrame, max_zoom: int, min_zoom: int = 0,
-                  lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def build_pyramid(df: DataFrame, max_zoom: int, min_zoom: int = 0) -> DataFrame:
     """Full tile pyramid z in [min_zoom, max_zoom] in ONE raw-data pass.
 
     The finest level aggregates the raw points; every coarser level
@@ -74,7 +70,7 @@ def build_pyramid(df: DataFrame, max_zoom: int, min_zoom: int = 0,
     exact, since Web-Mercator tiles nest) — at scale this is the difference
     between one 100TB scan and (max_zoom - min_zoom + 1) of them.
     """
-    levels = [rollup_tiles(df, max_zoom, lat_col, lon_col)]
+    levels = [rollup_tiles(df, max_zoom)]
     cur = levels[0]
     for z in range(max_zoom - 1, min_zoom - 1, -1):
         cur = (cur.select(F.lit(z).alias("tile_z"),

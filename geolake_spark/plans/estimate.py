@@ -5,16 +5,14 @@ datastore.py:21,363-394, api_utils.py:33-73): estimate the result size from
 metadata before running, reject queries above ``maximum_query_size_gb``
 (default 10 GB), floor the human-readable size at 0.01 units.
 
-Here the estimate comes from Iceberg-style manifest stats times a predicate
-selectivity guess — never a data scan.  For plain DataFrames we fall back to
-Catalyst's logical plan stats (sizeInBytes), which are also metadata-only.
+Here the estimate is the size Catalyst's optimized plan statistics give for
+the request's DataFrame (``sizeInBytes``, :func:`estimate_df_bytes`) —
+metadata only, never a data scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from geolake_spark.catalog import IcebergishTable
 
 DEFAULT_MAX_REQUEST_SIZE_GB = 10.0  # datastore.py:21
 _UNITS = [("TB", 1024 ** 4), ("GB", 1024 ** 3), ("MB", 1024 ** 2),
@@ -23,14 +21,6 @@ _UNITS = [("TB", 1024 ** 4), ("GB", 1024 ** 3), ("MB", 1024 ** 2),
 
 class TooBigRequestError(ValueError):
     pass
-
-
-def estimate_table_bytes(table: IcebergishTable,
-                         partition_filter=None) -> int:
-    ms = table.manifests()
-    if partition_filter is not None:
-        ms = [m for m in ms if partition_filter(m["partition"])]
-    return sum(m["byte_size"] for m in ms)
 
 
 def estimate_df_bytes(df: DataFrame) -> int:

@@ -6,9 +6,10 @@ fetched via ``GET /download/{id}``; /root/reference/datastore/dbmanager/
 dbmanager.py:42-49,102-132 and api/app/main.py:256-357) as a Spark-first
 library component:
 
-* each request runs in a daemon thread under its own **Spark job group**,
-  so a timeout cancels the actual cluster work
-  (``sparkContext.cancelJobGroup``) — not just the bookkeeping;
+* each request runs in a daemon thread under its own **Spark job group**
+  and a job tag unique to its manager, so a timeout cancels the actual
+  cluster work (``sparkContext.cancelJobsWithTag``) — not just the
+  bookkeeping, and never another manager's request with the same id;
 * results are written as parquet snapshots under the store directory and
   surfaced as ``download_uri`` + ``size_bytes`` (the reference's Download
   row, dbmanager.py Download model);
@@ -26,6 +27,7 @@ import os
 import threading
 import time
 import traceback
+import uuid
 from dataclasses import asdict, dataclass, field
 from enum import Enum
 
@@ -91,6 +93,9 @@ class RequestManager:
         self._lock = threading.Lock()
         self._requests: dict[int, Request] = {}
         self._next_id = 1
+        # request ids restart at 1 in every manager: the cancel tag adds
+        # this manager's own part so it reaches only its own request's jobs
+        self._tag_prefix = f"geolake-req-{uuid.uuid4().hex}"
         self._load()
 
     # -- persistence ----------------------------------------------------------
@@ -138,10 +143,11 @@ class RequestManager:
                result_format: str | None = None) -> int:
         """Run ``plan()`` (-> DataFrame) in the background; returns the id.
 
-        The thread tags its Spark jobs with group ``geolake-req-<id>``; on
-        timeout a timer cancels that job group, which aborts the running
-        stages cluster-wide and fails the write.  ``result_format`` routes
-        the sink (parquet | json | geojson — sinks.write_result)."""
+        The thread runs its Spark jobs in group ``geolake-req-<id>`` and
+        tags them with ``<manager tag>-<id>``; on timeout a timer cancels
+        the jobs with that tag, which aborts the running stages
+        cluster-wide and fails the write.  ``result_format`` routes the
+        sink (parquet | json | geojson — sinks.write_result)."""
         with self._lock:
             rid = self._next_id
             self._next_id += 1
@@ -151,11 +157,12 @@ class RequestManager:
             self._requests[rid] = req
             self._flush()
         group = f"geolake-req-{rid}"
+        tag = f"{self._tag_prefix}-{rid}"
         timed_out = threading.Event()
 
         def cancel():
             timed_out.set()
-            self.spark.sparkContext.cancelJobGroup(group)
+            self.spark.sparkContext.cancelJobsWithTag(tag)
 
         timer = threading.Timer(timeout_s, cancel) if timeout_s else None
 
@@ -166,6 +173,7 @@ class RequestManager:
                 self.spark.sparkContext.setJobGroup(
                     group, f"request {rid} ({dataset}/{product})",
                     interruptOnCancel=True)
+                self.spark.sparkContext.addJobTag(tag)
                 if timer:
                     timer.start()
                 df = plan()
@@ -204,6 +212,7 @@ class RequestManager:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
                 sc.setLocalProperty("spark.job.interruptOnCancel", None)
+                sc.clearJobTags()
 
         threading.Thread(target=run, name=group, daemon=True).start()
         return rid
@@ -260,8 +269,7 @@ class RequestManager:
             os.replace(tmp, zpath)
         return zpath
 
-    def wait(self, request_id: int, timeout_s: float = 300.0,
-             poll_s: float = 0.05) -> str:
+    def wait(self, request_id: int, timeout_s: float = 300.0) -> str:
         """Block until the request leaves PENDING/RUNNING; returns status."""
         deadline = time.time() + timeout_s
         while time.time() < deadline:
@@ -269,5 +277,5 @@ class RequestManager:
             if st not in (RequestStatus.PENDING.value,
                           RequestStatus.RUNNING.value):
                 return st
-            time.sleep(poll_s)
+            time.sleep(0.05)
         raise TimeoutError(f"request {request_id} still running")

@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
 Local-mode testing stands in for a multi-executor cluster; every conf here is
-the one we'd ship to a 1000-executor job (AQE on, skew-join on, Arrow on,
-shuffle partitions sized to the parallelism level).  Cores and heap default
-to what the host offers: the CPUs this process may run on and half of RAM.
+the one we'd ship to a 1000-executor job (Arrow on, shuffle partitions sized
+to the parallelism level; AQE with partition coalescing and skew-join
+splitting is Spark's default and is left as is).  Cores and heap default to
+what the host offers: the CPUs this process may run on and half of RAM.
 """
 
 from __future__ import annotations
@@ -31,9 +32,6 @@ def get_spark(app_name: str = "geolake_spark",
         .appName(app_name)
         # On a real cluster: 2-3x total executor cores; locally: the core count.
         .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -45,10 +43,6 @@ def get_spark(app_name: str = "geolake_spark",
         # split scans finer than the 128MB default so wide fact files fan out
         # across all cores even when column pruning reads a small fraction
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        # the inline ray-cast CASE ladder exceeds the default 8000-bytecode
-        # hugeMethodLimit, silently dropping the stage out of whole-stage
-        # codegen (measured 10x slower interpreted). Allow big methods.
-        .config("spark.sql.codegen.hugeMethodLimit", "65535")
         # shuffle through tmpfs where there is one: local-mode shuffle files
         # are ephemeral
         .config("spark.local.dir", local_dir)

@@ -20,17 +20,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geolake_spark.functions.geo import LAT, LON
+
 FORMATS = ("parquet", "json", "geojson")
 
 
-def points_geojson(df: DataFrame, lat_col: str = "lat",
-                   lon_col: str = "lon") -> DataFrame:
+def points_geojson(df: DataFrame) -> DataFrame:
     """Point-feature strings: geometry from lat/lon, every other column in
     ``properties`` (JVM to_json — no Python in the row path)."""
-    props_cols = [c for c in df.columns if c not in (lat_col, lon_col)]
+    props_cols = [c for c in df.columns if c not in (LAT, LON)]
     geom = F.to_json(F.struct(
         F.lit("Point").alias("type"),
-        F.array(F.col(lon_col), F.col(lat_col)).alias("coordinates")))
+        F.array(F.col(LON), F.col(LAT)).alias("coordinates")))
     props = F.to_json(F.struct(*[F.col(c) for c in props_cols]))
     return df.select(
         F.concat(F.lit('{"type":"Feature","geometry":'), geom,
@@ -47,7 +48,7 @@ def write_result(df: DataFrame, path: str, format: str | None = None) -> None:
         if {"tile_z", "tile_x", "tile_y"} <= set(df.columns):
             from geolake_spark.operators.tiles import tiles_geojson
             feats = tiles_geojson(df)
-        elif {"lat", "lon"} <= set(df.columns):
+        elif {LAT, LON} <= set(df.columns):
             feats = points_geojson(df)
         else:
             raise ValueError("geojson needs tile_z/x/y or lat/lon columns")

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from geolake_spark.functions.geo import LAT, LON
+
 CRS = "EPSG:4326"
 
 
@@ -32,14 +34,14 @@ def rename_coords(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df
 
 
-def collapse_curvilinear(df: DataFrame, row_col: str = "i", col_col: str = "j",
-                         lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
+def collapse_curvilinear(df: DataFrame, row_col: str = "i",
+                         col_col: str = "j") -> DataFrame:
     """Replace 2-d curvilinear coordinates with their 1-d axis means —
     window averages over the grid-row / grid-column (no driver collect)."""
     w_row = Window.partitionBy(row_col)
     w_col = Window.partitionBy(col_col)
-    return (df.withColumn(lat_col, F.avg(lat_col).over(w_row))
-            .withColumn(lon_col, F.avg(lon_col).over(w_col)))
+    return (df.withColumn(LAT, F.avg(LAT).over(w_row))
+            .withColumn(LON, F.avg(LON).over(w_col)))
 
 
 def choose_variables(df: DataFrame, variables: list[str] | None = None,
@@ -59,7 +61,7 @@ def choose_variables(df: DataFrame, variables: list[str] | None = None,
     keys = [c for c in df.columns]
     if variables is not None:
         keep = [c for c in keys if c in variables or c in
-                ("ts", "lat", "lon", "level")]
+                ("ts", LAT, LON, "level")]
         return df.select(*keep)
     if skip is not None:
         return df.select(*[c for c in keys if c not in skip])

@@ -27,6 +27,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from geolake_spark.functions.geo import LAT, LON
 from geolake_spark.functions.text import extract_text_bytes
 
 SEED = 42
@@ -105,8 +106,8 @@ def gen_pages(n_rows: int, seed: int = SEED) -> pa.Table:
         "html": pa.array(html, pa.binary()),
         "text": pa.array(text, pa.string()),
         "lang": pa.array(lang, pa.string()),
-        "lat": pa.array(lat, pa.float64()),
-        "lon": pa.array(lon, pa.float64()),
+        LAT: pa.array(lat, pa.float64()),
+        LON: pa.array(lon, pa.float64()),
     })
 
 
@@ -163,8 +164,8 @@ def gen_query_points(n: int = 20, seed: int = SEED) -> pa.Table:
     lat[0], lon[0] = 10.0, 25.0  # reference location fixture
     return pa.table({
         "query_id": pa.array(np.arange(n, dtype=np.int64)),
-        "lat": pa.array(lat, pa.float64()),
-        "lon": pa.array(lon, pa.float64()),
+        LAT: pa.array(lat, pa.float64()),
+        LON: pa.array(lon, pa.float64()),
         "k": pa.array(np.full(n, 5, dtype=np.int32)),
     })
 
@@ -191,8 +192,8 @@ def gen_obs(seed: int = SEED) -> pa.Table:
     value[nan_mask] = np.nan
     return pa.table({
         "ts": pa.array(ts[t_i].astype("datetime64[us]"), pa.timestamp("us")),
-        "lat": pa.array(lats[la_i], pa.float64()),
-        "lon": pa.array(lons[lo_i], pa.float64()),
+        LAT: pa.array(lats[la_i], pa.float64()),
+        LON: pa.array(lons[lo_i], pa.float64()),
         "level": pa.array(levels[le_i], pa.float64()),
         "var": pa.array(variables[v_i], pa.string()),
         "value": pa.array(value, pa.float64()),
@@ -203,48 +204,6 @@ def gen_obs(seed: int = SEED) -> pa.Table:
 
 SF_ROWS = {"0.001": 500, "0.01": 5000, "0.1": 50000, "1": 500000,
            "4": 4_000_000}
-
-
-def gen_pages_geo(n_rows: int, seed: int = SEED,
-                  include_url: bool = True) -> pa.Table:
-    """Coordinate-scale pages table (url, lat, lon) — fully vectorized, for
-    throughput/scaling benchmarks.  Stands in for the column-pruned scan of
-    the full pages table: the spatial-join job reads exactly these columns
-    off a full-width table anyway (Parquet projection), so physical work is
-    identical while generation stays tractable at 10^8+ rows."""
-    rng = np.random.RandomState(seed + 99)
-    city_lat, city_lon = _city_centers(np.random.RandomState(seed))
-    ranks = rng.zipf(1.3, size=n_rows) % N_HOSTS
-    city = ranks.astype(np.int64) % N_CITIES
-    lat = np.clip(city_lat[city] + rng.normal(0, 0.8, n_rows), -89.9, 89.9)
-    lon = np.clip(city_lon[city] + rng.normal(0, 0.8, n_rows), -179.9, 179.9)
-    cols = {}
-    if include_url:
-        ids = np.arange(n_rows, dtype=np.int64)
-        cols["url"] = pa.array(np.char.add("https://h", ids.astype("U12")),
-                               pa.string())
-    cols["lat"] = pa.array(lat, pa.float64())
-    cols["lon"] = pa.array(lon, pa.float64())
-    return pa.table(cols)
-
-
-def ensure_pages_geo(base_dir: str, n_rows: int,
-                     include_url: bool = True) -> str:
-    suffix = "" if include_url else "_slim"
-    out = os.path.join(base_dir, f"pages_geo_{n_rows}{suffix}.parquet")
-    if not os.path.exists(out):
-        chunk = 32_000_000
-        writer = None
-        for start in range(0, n_rows, chunk):
-            n = min(chunk, n_rows - start)
-            tbl = gen_pages_geo(n, seed=SEED + start // chunk,
-                                include_url=include_url)
-            if writer is None:
-                writer = pq.ParquetWriter(out, tbl.schema)
-            for batch in tbl.to_batches(max_chunksize=max(n // 32, 10000)):
-                writer.write_batch(batch)
-        writer.close()
-    return out
 
 
 # Multi-script word pools for the unicode corpus (round 4): a real web
@@ -297,23 +256,6 @@ def gen_docs_multiscript(n_rows: int, seed: int = SEED,
         "text": pa.array(texts, pa.string()),
         "lang": pa.array(lang, pa.string()),
     })
-
-
-def ensure_docs_multiscript(base_dir: str, n_rows: int) -> str:
-    out = os.path.join(base_dir, f"docs_multiscript_{n_rows}.parquet")
-    if not os.path.exists(out):
-        chunk = 125_000
-        writer = None
-        for start in range(0, n_rows, chunk):
-            n = min(chunk, n_rows - start)
-            tbl = gen_docs_multiscript(n, seed=SEED + start // chunk,
-                                       id_offset=start)
-            if writer is None:
-                writer = pq.ParquetWriter(out, tbl.schema)
-            for batch in tbl.to_batches(max_chunksize=max(n // 16, 5000)):
-                writer.write_batch(batch)
-        writer.close()
-    return out
 
 
 EMB_DIM = 64

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geolake_spark.functions.geo import grid_cell_col
+from geolake_spark.functions.geo import LAT, LON, grid_cell_col
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -20,8 +20,8 @@ PAGES_SCHEMA = T.StructType([
     T.StructField("html", T.BinaryType()),
     T.StructField("text", T.StringType()),
     T.StructField("lang", T.StringType()),
-    T.StructField("lat", T.DoubleType()),
-    T.StructField("lon", T.DoubleType()),
+    T.StructField(LAT, T.DoubleType()),
+    T.StructField(LON, T.DoubleType()),
 ])
 
 
@@ -38,7 +38,7 @@ def windowed_cell_counts(pages: DataFrame, res: int = 5,
     """Per (event-time window, cell) page counts with late-data handling."""
     return (pages
             .withWatermark("warc_ts", watermark)
-            .withColumn("cell", grid_cell_col(F.col("lat"), F.col("lon"), res))
+            .withColumn("cell", grid_cell_col(F.col(LAT), F.col(LON), res))
             .groupBy(F.window("warc_ts", window).alias("w"), "cell")
             .agg(F.count("*").alias("page_count"))
             .select(F.col("w.start").alias("window_start"), "cell", "page_count"))

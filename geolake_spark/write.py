@@ -47,7 +47,6 @@ def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str],
 def write_snapshot(df: DataFrame, table: IcebergishTable,
                    partition_cols: list[str],
                    resume: bool = False,
-                   lat_col: str = "lat", lon_col: str = "lon",
                    repartition: bool = True) -> dict:
     """Write df into the table, one snapshot. Returns a summary dict.
 
@@ -90,8 +89,7 @@ def write_snapshot(df: DataFrame, table: IcebergishTable,
                                          [match(k) for k in skip_keys])
         work = work.filter(~any_committed)
 
-    metrics = _write_partitions(work, table, partition_cols, lat_col,
-                                lon_col, repartition)
+    metrics = _write_partitions(work, table, partition_cols, repartition)
     return _commit(table, metrics, len(skip_keys))
 
 
@@ -107,8 +105,7 @@ def _commit(table: IcebergishTable, metrics: list[dict], skipped: int,
 
 
 def _write_partitions(work: DataFrame, table: IcebergishTable,
-                      partition_cols: list[str], lat_col: str = "lat",
-                      lon_col: str = "lon",
+                      partition_cols: list[str],
                       repartition: bool = True) -> list[dict]:
     """Write ``work`` as fresh files under the table's data dir; return one
     manifest per written partition, uncommitted, listing its ``files``.
@@ -125,7 +122,7 @@ def _write_partitions(work: DataFrame, table: IcebergishTable,
         # expensive) and doubles as a read-back validation of the write.
         schema = StructType.fromJson(table.table_spec()["schema"])
         back = work.sparkSession.read.schema(schema).parquet(stage)
-        metrics = partition_metrics(back, partition_cols, lat_col, lon_col)
+        metrics = partition_metrics(back, partition_cols)
         for m in metrics:
             files = sorted(os.path.relpath(unquote(urlparse(u).path), stage)
                            for u in m["files"])

@@ -65,7 +65,7 @@ def test_snapshot_log_and_partition_pruned_read(spark, table):
 
 def test_estimate_and_admission(spark, table):
     write_snapshot(_sample(spark, ["en"]), table, ["lang"])
-    n = estimate.estimate_table_bytes(table)
+    n = table.stats()["bytes"]
     assert n > 0
     estimate.admit(n)  # small -> admitted
     with pytest.raises(estimate.TooBigRequestError):

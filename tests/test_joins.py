@@ -129,12 +129,12 @@ def test_knn_matches_brute_force(spark, pages, pages_pdf):
 def test_knn_table_matches_brute_force(spark, pages, pages_pdf):
     """Probe-table kNN vs brute force, 60 probes spread worldwide
     including polar/antimeridian."""
-    from geolake_spark.functions.geo import geocode_lat_col, geocode_lon_col
+    from geolake_spark.functions.geo import geocode_lat, geocode_lon
     import pyspark.sql.functions as F
     probes = (spark.range(60)
               .select(F.col("id").alias("query_id"),
-                      geocode_lat_col(F.col("id") + 1000000).alias("lat"),
-                      geocode_lon_col(F.col("id") + 1000000).alias("lon")))
+                      geocode_lat(F.col("id") + 1000000).alias("lat"),
+                      geocode_lon(F.col("id") + 1000000).alias("lon")))
     out = joins.knn_join_table(pages, probes, k=4, res=5)
     # the result is a local relation, not a Python RDD (no Python workers)
     assert "ExistingRDD" not in \
@@ -246,12 +246,12 @@ def test_knn_deterministic_tiebreak(spark):
 
 def test_knn_table_adaptive_res_matches_brute_force(spark, pages, pages_pdf):
     """The default resolution (no ``res`` given) stays exact."""
-    from geolake_spark.functions.geo import geocode_lat_col, geocode_lon_col
+    from geolake_spark.functions.geo import geocode_lat, geocode_lon
     import pyspark.sql.functions as F
     probes = (spark.range(12)
               .select(F.col("id").alias("query_id"),
-                      geocode_lat_col(F.col("id") + 77000).alias("lat"),
-                      geocode_lon_col(F.col("id") + 77000).alias("lon")))
+                      geocode_lat(F.col("id") + 77000).alias("lat"),
+                      geocode_lon(F.col("id") + 77000).alias("lon")))
     out = joins.knn_join_table(pages, probes, k=3)
     got = (out.select("query_id", "url", "rank").toPandas()
            .sort_values(["query_id", "rank"]))

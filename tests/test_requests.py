@@ -2,7 +2,7 @@
 
 Mirrors the reference lifecycle (dbmanager.py:42-49,102-132;
 api/app/main.py:214-357): submit -> PENDING/RUNNING -> DONE (download) /
-FAILED (reason) / TIMEOUT (job-group cancel), persisted across manager
+FAILED (reason) / TIMEOUT (job-tag cancel), persisted across manager
 restarts."""
 
 import json
@@ -135,7 +135,7 @@ def test_request_failure_reason(catalog):
 
 def test_request_timeout_cancels_job_group(catalog, spark, synth_paths):
     """A deliberately slow plan (sleepy pandas UDF) must land in TIMEOUT via
-    Spark job-group cancellation, not run to completion."""
+    Spark job-tag cancellation, not run to completion."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -153,9 +153,38 @@ def test_request_timeout_cancels_job_group(catalog, spark, synth_paths):
     assert status == RequestStatus.TIMEOUT.value
 
 
+def test_timeout_cancels_only_its_own_manager(spark, tmp_path):
+    """Two managers each hold a request 1.  A's timeout cancels A's jobs
+    only: B's request, running at the same time, still finishes."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def sleepy(v: pd.Series) -> pd.Series:
+        time.sleep(6)
+        return v
+
+    def plan():
+        return spark.range(1).select(sleepy(F.col("id")).alias("x"))
+
+    a = RequestManager(spark, str(tmp_path / "a"))
+    b = RequestManager(spark, str(tmp_path / "b"))
+    rid_b = b.submit(plan, "web", "pages")
+    deadline = time.time() + 60
+    while (not spark.sparkContext.statusTracker().getActiveJobsIds()
+           and time.time() < deadline):
+        time.sleep(0.05)
+    rid_a = a.submit(plan, "web", "pages", timeout_s=1.0)
+    assert rid_a == rid_b == 1
+    assert a.wait(rid_a, timeout_s=90) == RequestStatus.TIMEOUT.value
+    assert b.wait(rid_b, timeout_s=90) == RequestStatus.DONE.value, \
+        b.get_request_status(rid_b)
+
+
 def test_request_store_survives_restart(catalog, spark):
     rid = catalog.submit_execute("web", "pages", {"filters": {"lang": "en"}})
-    catalog.requests.wait(rid, timeout_s=120)
+    assert (catalog.requests.wait(rid, timeout_s=120)
+            == RequestStatus.DONE.value), catalog.get_request_status(rid)
     reloaded = RequestManager(spark, catalog.requests.store_dir)
     assert reloaded.get_request_status(rid)[0] == RequestStatus.DONE.value
     assert os.path.exists(reloaded.download(rid))
