@@ -126,7 +126,9 @@ class IcebergishTable:
         """Rewrite one partition's files into ``target_files`` larger
         ones and commit a new snapshot — the small-files maintenance op
         (Iceberg ``rewrite_data_files`` analogue).  The rewrite goes
-        through the one writer (fresh files) and is verified by row
+        through the one writer (fresh files, each re-sorted by grid cell
+        when the table has lat/lon and re-compressed with zstd, whatever
+        layout and codec the old files had) and is verified by row
         count before the commit; the manifest keeps its lineage metrics
         (row_count, cell_histogram, column_stats) with only ``files`` and
         ``byte_size`` swapped, and the commit deletes the old files."""

@@ -199,6 +199,108 @@ def test_write_snapshot_loser_leaves_winner(spark, table, monkeypatch):
     assert _data_files(table) == files
 
 
+def test_failed_write_removes_moved_files(spark, table, monkeypatch):
+    """A write that fails after moving some of its files under data/
+    deletes them before the error propagates: data/ keeps exactly the
+    files the last snapshot lists."""
+    write_snapshot(_sample(spark, ["en"]), table, ["lang"])
+    renames, calls = os.renames, []
+
+    def fail_second(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("disk full")
+        renames(src, dst)
+    monkeypatch.setattr(os, "renames", fail_second)
+    with pytest.raises(OSError, match="disk full"):
+        write_snapshot(_sample(spark, ["de", "fr"]), table, ["lang"])
+    assert len(calls) == 2
+    assert table.current_snapshot_id() == 1
+    assert _data_files(table) == {f for m in table.manifests()
+                                  for f in m["files"]}
+
+
+def _file_layout(table, rel):
+    """(column-chunk codecs, res-9 cell keys in file order with nulls
+    first) of one data file, read with pyarrow."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from geolake_spark import cells
+    pf = pq.ParquetFile(os.path.join(table.data_dir, rel))
+    md = pf.metadata
+    codecs = {md.row_group(g).column(c).compression
+              for g in range(md.num_row_groups)
+              for c in range(md.num_columns)}
+    t = pf.read(columns=["lat", "lon"])
+    lat = t.column("lat").to_numpy(zero_copy_only=False)
+    lon = t.column("lon").to_numpy(zero_copy_only=False)
+    null = np.isnan(lat) | np.isnan(lon)
+    key = np.where(null, np.iinfo(np.int64).min,
+                   cells.grid_cell(np.where(null, 0.0, lat),
+                                   np.where(null, 0.0, lon), 9))
+    return codecs, key
+
+
+def test_geo_files_are_cell_sorted_and_zstd(spark, table):
+    """Every committed file is zstd and, with lat/lon, sorted by its res-9
+    grid cell (nulls first); a compaction rewrites an unsorted snappy file
+    that way too; a table without lat/lon still round-trips."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    rng = random.Random(7)
+    rows = [(f"u{i}", ("en", "de")[i % 2], rng.uniform(-80, 80),
+             rng.uniform(-179, 179)) for i in range(300)]
+    rows.append(("nolat", "en", None, 5.0))
+    schema = T.StructType([T.StructField("url", T.StringType()),
+                           T.StructField("lang", T.StringType()),
+                           T.StructField("lat", T.DoubleType()),
+                           T.StructField("lon", T.DoubleType())])
+    write_snapshot(spark.createDataFrame(rows, schema), table, ["lang"])
+    for m in table.manifests():
+        for f in m["files"]:
+            codecs, key = _file_layout(table, f)
+            assert codecs == {"ZSTD"}
+            assert (key[1:] >= key[:-1]).all()
+    back = table.read(spark).select("url", "lang", "lat", "lon")
+    assert sorted(map(tuple, back.collect())) == sorted(rows)
+
+    # a partition planted unsorted and snappy, as an older writer left it
+    fr = [(f"v{i}", rng.uniform(-80, 80), rng.uniform(-179, 179))
+          for i in range(200)]
+    rel = "lang=fr/part-old.snappy.parquet"
+    os.makedirs(os.path.join(table.data_dir, "lang=fr"))
+    pq.write_table(pa.table({"url": [r[0] for r in fr],
+                             "lat": [r[1] for r in fr],
+                             "lon": [r[2] for r in fr]}),
+                   os.path.join(table.data_dir, rel), compression="snappy")
+    codecs, key = _file_layout(table, rel)
+    assert codecs == {"SNAPPY"} and not (key[1:] >= key[:-1]).all()
+    table.commit([{"partition": {"lang": "fr"}, "row_count": len(fr),
+                   "files": [rel]}])
+    table.compact_partition(spark, {"lang": "fr"})
+    (man,) = [m for m in table.manifests() if m["partition"]["lang"] == "fr"]
+    assert rel not in man["files"]
+    assert not os.path.exists(os.path.join(table.data_dir, rel))
+    for f in man["files"]:
+        codecs, key = _file_layout(table, f)
+        assert codecs == {"ZSTD"}
+        assert (key[1:] >= key[:-1]).all()
+    back = table.read(spark, partition_filter=lambda p: p["lang"] == "fr")
+    assert sorted(map(tuple, back.select("url", "lat", "lon").collect())) \
+        == sorted(fr)
+
+    plain = IcebergishTable(table.root + "-plain")
+    rows = [(f"u{i}", ("en", "de")[i % 2], i) for i in range(50)]
+    write_snapshot(spark.createDataFrame(rows, ["url", "lang", "n"]),
+                   plain, ["lang"])
+    back = plain.read(spark).select("url", "lang", "n")
+    assert sorted(map(tuple, back.collect())) == sorted(rows)
+
+
 def test_uncommitted_write_is_not_read(spark, table):
     """Files of a write that has not committed change no read: neither a
     scan planned before the write nor a fresh read of the snapshot."""
